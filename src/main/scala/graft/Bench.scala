@@ -203,16 +203,12 @@ object Bench {
          |"shuffle_bytes":$fullShuf}""".stripMargin
     java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath), fullJson)
 
-    // Final stdout line: FULL query keys. The r08-r11 short-key scheme
-    // (prefix before '_') made the line fit the driver's stdout tail but
-    // silently broke the driver's per-query comparison for four rounds
-    // (PERF per_query empty, parsed null every round) — the driver
-    // matches stdout keys against query names verbatim. Full keys
-    // restore that contract; bench_full.json keeps the complete
-    // 3-dp + shuffle-byte artifact either way.
-    val qs = results.map(r => jStr(r.name) + ":" + f(r.sec, 2))
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f(total, 2)},"unit":"sec","failed":$failedJson,"unstable":$unstableJson,"full":"$fullPath","queries":$qs,"sf":"$sfDir"}""")
+    // Final stdout line: the summary only. A runner that keeps only the
+    // last ~2 KB of stdout must still parse it as JSON, and a map of all
+    // 259 keys is ~6.5 KB, so the line carries no per-key data. Per-key
+    // seconds, cpu and shuffle bytes are in bench_full.json (`full`),
+    // which is all tools/benchdiff.py reads.
+    println(s"""{"metric":"total","value":${f(total, 2)},"unit":"sec","failed":$failedJson,"unstable":$unstableJson,"full":"$fullPath","sf":"$sfDir"}""")
     System.out.flush()
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

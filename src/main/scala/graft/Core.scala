@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** One engine operator: a DataFrame builder plus (when SQL-expressible) a
   * DuckDB oracle query over the same parquet tables. Column names/types in
@@ -16,8 +19,42 @@ object Tables {
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The session confs that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  private val schemas = new FileMemo[String, StructType]
+
+  /** A table as a DataFrame. Every call returns a fresh relation with fresh
+    * attribute ids, so self-joins and `a("k") === b("k")` resolve as on any
+    * plain read.
+    *
+    * Parquet schema inference is a Spark job plus a footer read, once per
+    * call, so the inferred schema is memoized JVM-wide and a hit reads with
+    * `spark.read.schema(memo)`: the same relation and physical plan without
+    * the job. The memo key is the fully qualified path, the [[fingerprint]]
+    * of its files (name, length and modification time of each leaf) and the
+    * session's values of [[inferenceConfs]]; a table rewritten in place, or
+    * read under a different inference conf, infers afresh. A path whose
+    * files cannot be listed is read without the memo, so a missing table
+    * fails exactly as a plain `spark.read.parquet` does.
+    */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val stamp = fingerprint(spark, path)
+      .map(fs => (fs, inferenceConfs.map(spark.conf.getOption)))
+    val df = schemas.get(path, stamp) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val read = spark.read.parquet(path)
+        schemas.put(path, stamp, read.schema)
+        read
+    }
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark only reads as a
     // long (spark.sql.legacy.parquet.nanosAsLong=true, set in every session
     // builder). Normalize to a microsecond TimestampType column; DuckDB's
@@ -27,6 +64,62 @@ object Tables {
       df.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
         org.apache.spark.sql.functions.expr("ts div 1000")))
     else df
+  }
+
+  /** The files a path stands for: its fully qualified form plus the name,
+    * length and modification time of every leaf file (listed recursively
+    * when the path is a directory). Equal fingerprints mean unchanged
+    * files; None when the path cannot be listed (absent, unreadable).
+    */
+  private[graft] def fingerprint(spark: SparkSession,
+                                 path: String): Option[FileSet] =
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(GraftShim.hadoopConf(spark))
+      val root = fs.makeQualified(p)
+      val top = fs.getFileStatus(root)
+      val leaves = if (top.isDirectory) {
+        val it = fs.listFiles(root, true)
+        val b = Seq.newBuilder[FileStatus]
+        while (it.hasNext) b += it.next()
+        b.result()
+      } else Seq(top)
+      Some(FileSet(root.toString, leaves
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .sorted))
+    } catch { case NonFatal(_) => None }
+
+  /** The fingerprint of table `name` under `dir`. */
+  private[graft] def fingerprint(spark: SparkSession, dir: String,
+                                 name: String): Option[FileSet] =
+    fingerprint(spark, s"$dir/$name.parquet")
+
+  private[graft] final case class FileSet(
+      path: String, leaves: Seq[(String, Long, Long)])
+
+  /** A JVM-wide memo of values derived from files: each entry keeps the
+    * stamp (a [[fingerprint]], plus whatever else the value depends on) it
+    * was derived under, and a lookup hits only under an equal stamp. One
+    * entry per key, so rewriting a table replaces its entry; a None stamp
+    * (unlistable files) is never stored or hit.
+    */
+  private[graft] final class FileMemo[K, V] {
+    private val m = new java.util.concurrent.ConcurrentHashMap[K, (Any, V)]()
+
+    def get(key: K, stamp: Option[Any]): Option[V] =
+      stamp.flatMap(st => Option(m.get(key)).collect {
+        case (s, v) if s == st => v
+      })
+
+    def put(key: K, stamp: Option[Any], v: V): Unit =
+      stamp.foreach(st => m.put(key, (st, v)))
+
+    def getOrElseUpdate(key: K, stamp: Option[Any])(compute: => V): V =
+      get(key, stamp).getOrElse {
+        val v = compute
+        put(key, stamp, v)
+        v
+      }
   }
 }
 

@@ -25,16 +25,15 @@ object Dedup {
     * always a count() — metadata-only on parquet (row-group footers, no
     * data pages) — NOT catalog statistics, which can be stale after an
     * outdated ANALYZE and would silently mis-size the LSH plane count.
-    * Memoized per path so repeated invocations in a session never re-run
-    * the job; the cache assumes a path's files don't change mid-session
-    * (sizing-only: a stale entry affects recall/perf, never answers).
+    * Memoized per table and its file fingerprint (Tables.FileMemo), so
+    * repeated invocations in a session never re-run the job and a table
+    * rewritten in place is counted afresh.
     */
-  private val rowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def corpusRows(df: org.apache.spark.sql.DataFrame,
-                         key: String): Long =
-    rowCountCache.computeIfAbsent(key,
-      _ => java.lang.Long.valueOf(df.count())).longValue()
+  private val rowCounts = new Tables.FileMemo[(String, String), Long]
+  private def corpusRows(s: SparkSession, d: String, n: String): Long =
+    rowCounts.getOrElseUpdate((d, n), Tables.fingerprint(s, d, n)) {
+      t(s, d, n).count()
+    }
 
   /** d09's lazily-persisted candidate frame: bounded HotCache slot —
     * at most one resident per session, freed by HotCache.releaseAll()
@@ -138,7 +137,7 @@ object Dedup {
     * hash mismatch. Turn that silent desync into an explanatory failure.
     */
   def assertOracleBounds(s: SparkSession, d: String): Unit = {
-    val rows = corpusRows(t(s, d, "embeddings"), s"$d/embeddings")
+    val rows = corpusRows(s, d, "embeddings")
     require(rows <= OraclePlaneBound,
       s"embeddings at $d has $rows rows > $OraclePlaneBound: the d06b/d09 " +
         "oracle SQL pins 4 LSH planes but the adaptive build would use " +
@@ -757,9 +756,8 @@ object Dedup {
         // n/10 make pair counts O(n²)); adaptive planes restore ~linear
         // growth while planted cos≈0.9999 pairs keep recall 1.0.
         // Corpus size via the memoized metadata-only count — one cheap
-        // job per path per session, never stale catalog stats
-        // (see corpusRows).
-        val total = corpusRows(t(s, d, "embeddings"), s"$d/embeddings")
+        // job per file set, never stale catalog stats (see corpusRows).
+        val total = corpusRows(s, d, "embeddings")
         val nPlanes = math.max(4,
           math.ceil(math.log(total / 2560.0) / math.log(2.0)).toInt)
         val planes = graft.functions.VectorFns.hyperplanes(nPlanes, 64)

@@ -107,9 +107,9 @@ object GraphOps {
     * degrades LOUDLY to the two-column groupBy, the always-correct
     * shape (e.g. partkeys cross 2^32 near SF ~21k, ~21 TB).
     */
-  private[operators] def pairCounts(df: DataFrame, arr: String,
-                                    cnt: String, idBound: => Long,
-                                    rawRoute: => Boolean = false)
+  private[graft] def pairCounts(df: DataFrame, arr: String,
+                                cnt: String, idBound: => Long,
+                                rawRoute: => Boolean = false)
       : DataFrame = {
     // r12 (§2.2/§5, VERDICT item 3 — the pair-agg spill at scale): when
     // `rawRoute` (scale-derived, see pairAggRaw) the raw packed pair
@@ -177,9 +177,11 @@ object GraphOps {
     * referential integrity: every l_suppkey/l_partkey references a
     * supplier/part row). One column-pruned min/max aggregate — trivial
     * next to the pair stage it guards at any scale — memoized per
-    * (dir, table, col): g05/g07/g08/g11 all probe supplier, and the
-    * probe is a plan-build-time Spark action, so without the memo each
-    * consumer re-ran the same job (r11 ADVICE).
+    * (dir, table, col) and the table's file fingerprint (Tables.FileMemo):
+    * g05/g07/g08/g11 all probe supplier, and the probe is a plan-build-time
+    * Spark action, so without the memo each consumer re-ran the same job
+    * (r11 ADVICE). A table rewritten in place is probed afresh, so a new
+    * id ≥ 2^32 or < 0 unpacks the key instead of colliding silently.
     *
     * Returns Long.MaxValue — i.e. "not packable", selecting pairCounts'
     * always-correct unpacked aggregation — when:
@@ -193,13 +195,12 @@ object GraphOps {
     * Ids are cast to long first so integral id columns of any width
     * probe uniformly.
     */
-  private val idBoundCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String),
-      java.lang.Long]()
+  private val idBounds = new Tables.FileMemo[(String, String, String), Long]
 
-  private[operators] def maxIdOf(s: SparkSession, d: String, table: String,
-                                 idCol: String): Long =
-    idBoundCache.computeIfAbsent((d, table, idCol), _ =>
+  private[graft] def maxIdOf(s: SparkSession, d: String, table: String,
+                             idCol: String): Long =
+    idBounds.getOrElseUpdate((d, table, idCol),
+      Tables.fingerprint(s, d, table)) {
       try {
         val row = t(s, d, table)
           .agg(min(col(idCol).cast("long")), max(col(idCol).cast("long")))
@@ -218,7 +219,8 @@ object GraphOps {
               e.getMessage.linesIterator.next() +
               ") — using the unpacked pair aggregation")
           Long.MaxValue
-      })
+      }
+    }
 
   private val R0 = 1000000000000L // rank unit: 1.0 == 10^12
   private val Iters = 6

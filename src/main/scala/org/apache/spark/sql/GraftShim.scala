@@ -54,4 +54,11 @@ object GraftShim {
     */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** The session's Hadoop conf, as file sources build it for a read
+    * (SessionState.newHadoopConf: the context's conf plus session
+    * overrides).
+    */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
 }
