@@ -56,17 +56,7 @@ object Bench {
       .map(_.trim.toInt).getOrElse(2).max(1)
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
       if (only.isDefined) "/tmp/bench_only.json" else "bench_full.json")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, "graft-bench")
 
     // Shuffle-byte counters, fed by every finished task; deltas between
     // drained snapshots give per-query attribution.

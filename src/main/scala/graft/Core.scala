@@ -141,8 +141,8 @@ object Timestamps {
     unix_micros(c.cast("timestamp")).cast("double") / lit(1e6)
 }
 
-/** Tuned local session for tests; Verify/Bench build their own (driver
-  * contract) with the same switches. AQE is on everywhere: it coalesces
+/** The one local session profile: Bench, Verify, the specs and every tool
+  * that runs queries build their session here. AQE is on everywhere: it coalesces
   * post-shuffle partitions and splits skewed ones — the Spark-native
   * re-expression of the reference's skew-tolerant shuffle service
   * (/root/reference/spark-code/.../CherryShuffleService.scala).

@@ -50,16 +50,11 @@ object ConnectedComponents {
       .cut()
     // r11: the per-round star-min tables are |nodes|-bounded, so the
     // adj⋈mins / ls⋈mins2 joins BROADCAST them while the node set fits
-    // an executor (size-aware, the g01/g06 hint pattern; conf-gated so
-    // tests can pin both shapes) — the edge stream is then never
-    // shuffled inside a round. Past the cap every round degrades to the
-    // shuffled join, the only shape at 1e9 nodes.
-    val maxBc = edges.sparkSession.conf
-      .getOption("graft.cc.maxBroadcastNodes")
-      .map(_.toLong).getOrElse(5000000L)
-    val probeLim = (maxBc + 1).min(Int.MaxValue.toLong).toInt
-    val bcMins = nodes.limit(probeLim).count() <= maxBc
-    def hint(df: DataFrame): DataFrame = if (bcMins) broadcast(df) else df
+    // an executor (BroadcastGuard, the g01/g06 hint pattern) — the edge
+    // stream is then never shuffled inside a round. Past the cap every
+    // round degrades loudly to the shuffled join, the only shape at 1e9
+    // nodes.
+    val hint = BroadcastGuard.hint("cc", "node set", nodes)
     // fixpoint = consecutive rounds produce the SAME edge set, checked
     // EXACTLY: equal counts plus an empty one-sided set difference
     // (both sets are distinct canonical (u,v) rows, so count equality +

@@ -834,20 +834,11 @@ object Dedup {
         val base = docs.filter(!isNew).select(digest.as("h"))
         // BROADCAST GUARD: the single-base-scan shape assumes the
         // increment's digest set is broadcast-sized (true for daily
-        // batches, false for a mis-declared 10 TB "increment"). Probe
-        // the batch row count with an early-terminating limit scan;
-        // past graft.d10.maxBroadcastRows drop the broadcast hints and
-        // let the planner/AQE pick shuffle joins — slower (the base
-        // gets shuffled) but it completes instead of OOM-ing the
-        // driver. Guard cost is bounded by the threshold itself.
-        val maxB = s.conf.getOption("graft.d10.maxBroadcastRows")
-          .map(_.toLong).getOrElse(5000000L)
-        val fits = batch.limit((maxB + 1).min(Int.MaxValue.toLong).toInt)
-          .count() <= maxB
-        if (!fits) System.err.println(
-          s"[graft] d10: increment exceeds $maxB rows - " +
-            "falling back to shuffle joins")
-        def hint(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
+        // batches, false for a mis-declared 10 TB "increment").
+        // BroadcastGuard probes the batch row count; past its cap the
+        // hints drop and the planner/AQE picks shuffle joins — slower
+        // (the base gets shuffled) but it completes.
+        val hint = BroadcastGuard.hint("d10", "increment", batch)
         // base-side work: one scan, broadcast-semi against batch digests,
         // distinct only over the matched sliver (never the full corpus)
         val inBase = base
@@ -983,14 +974,8 @@ object Dedup {
         val shared = d13SharedCache.register(
           spans.groupBy("h").agg(count(lit(1)).as("nd"))
             .filter(col("nd") >= 2).select("h"))
-        val maxB = s.conf.getOption("graft.d13.maxBroadcastSpans")
-          .map(_.toLong).getOrElse(5000000L)
         // the probe fills the cache slot, so the sliver is computed once
-        val fits = shared.limit((maxB + 1).min(Int.MaxValue.toLong).toInt)
-          .count() <= maxB
-        if (!fits) System.err.println(
-          s"[graft] d13: shared-span set exceeds $maxB rows - " +
-            "falling back to a shuffle join")
+        val hint = BroadcastGuard.hint("d13", "shared-span set", shared)
         // r11 (§1.2/§2.4): ONE doc-keyed aggregate computes both counts.
         // The r10 shape re-ran the tokenize+shingle+md5 span pass twice
         // more (perDoc + sharedPerDoc) and joined the two aggregates
@@ -999,8 +984,7 @@ object Dedup {
         // conditional count inside the same hash aggregate, and docs
         // with zero shared spans fall out as n_shared = 0 exactly as
         // the old coalesce-after-left-join did.
-        val sliver = (if (fits) broadcast(shared) else shared)
-          .withColumn("is_sh", lit(1L))
+        val sliver = hint(shared).withColumn("is_sh", lit(1L))
         spans.join(sliver, Seq("h"), "left")
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_spans"),
@@ -1180,14 +1164,17 @@ object Dedup {
           .filter(GraftShim.mightContain(
             GraftShim.scalarSubquery(bloom), col("h")))
           .select("h").distinct()
-        // exact verify only the candidate digests against the base
-        val inBase = base.join(broadcast(cand), Seq("h"), "left_semi")
+        // exact verify only the candidate digests against the base; all
+        // three broadcast sides are batch-bounded, so d10's guard over
+        // the batch keeps them safe when the increment is huge
+        val hint = BroadcastGuard.hint("d17", "increment", batch)
+        val inBase = base.join(hint(cand), Seq("h"), "left_semi")
           .distinct()
           .withColumn("in_base", lit(1))
         val firstInBatch = batch.groupBy("h").agg(min("doc_id").as("first_id"))
         batch
-          .join(broadcast(inBase), Seq("h"), "left")
-          .join(broadcast(firstInBatch), Seq("h"))
+          .join(hint(inBase), Seq("h"), "left")
+          .join(hint(firstInBatch), Seq("h"))
           .select(col("doc_id"),
             when(col("in_base") === 1, lit("dup_of_base"))
               .when(col("doc_id") > col("first_id"), lit("dup_in_batch"))

@@ -100,7 +100,10 @@ object GraphOps {
     * half the grouping-key bytes in the partial-aggregate hash maps and
     * across the exchange, one hash/equality op instead of two. Unpacked
     * right after the aggregate, so consumers see the identical
-    * (s1, s2, cnt) rows. Only sound while every id < 2^32 — `idBound`
+    * (s1, s2, cnt) rows as longs. Ids are cast to long before packing: a
+    * shift of a 32-bit id by 32 is a no-op, which would collide pairs
+    * (the cast is elided for the int64 ids of TPC-H). Only sound while
+    * every id < 2^32 — `idBound`
     * is the caller's cheap upper-bound probe over the id DIMENSION
     * table (suppliers/parts: one column-pruned max(), negligible next
     * to the pair stage at any scale); past the bound the aggregation
@@ -127,7 +130,8 @@ object GraphOps {
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     if (idBound < (1L << 32)) {
       val stream = pairStream(df, arr)
-        .select((shiftleft(col("s1"), 32).bitwiseOR(col("s2"))).as("pk"))
+        .select(shiftleft(col("s1").cast("long"), 32)
+          .bitwiseOR(col("s2").cast("long")).as("pk"))
       val routed =
         if (rawRoute) stream.repartition(width, col("pk")) else stream
       routed
@@ -148,30 +152,24 @@ object GraphOps {
 
   /** Scale-adaptive routing signal for [[pairCounts]] (§2.2: derive the
     * partitioning choice from input size, never a constant tuned for
-    * one scale). `auto` compares the fact-table scan bytes (driver-side
-    * file statistics — no Spark job) against
-    * `graft.pairs.shuffleRawMinBytes` (default 64 MB: sf0.1's 10.8 MB
-    * lineitem keeps the combining partial aggregate, sf1's 130 MB
-    * routes raw — the measured crossover sits between them, and on a
-    * cluster per-task memory is the same constraint the byte threshold
-    * proxies). `graft.pairs.aggMode` = partial|shuffle pins the route
-    * for tests and A/B runs.
+    * one scale): the fact-table scan bytes (driver-side file statistics
+    * — no Spark job) against [[ShuffleRawMinBytes]]. `PlanPin.rawPairs`
+    * pins the route for specs and A/B runs.
     */
   private def pairAggRaw(s: SparkSession, d: String): Boolean =
-    sys.env.get("GRAFT_PAIR_AGG") // bench A/B hook (Bench can't set confs)
-      .orElse(s.conf.getOption("graft.pairs.aggMode"))
-      .getOrElse("auto") match {
-      case "partial" => false
-      case "shuffle" => true
-      case _ =>
-        try {
-          val bytes = t(s, d, "lineitem").queryExecution.optimizedPlan
-            .stats.sizeInBytes
-          val thr = s.conf.getOption("graft.pairs.shuffleRawMinBytes")
-            .map(_.toLong).getOrElse(64L << 20)
-          bytes >= BigInt(thr)
-        } catch { case _: Exception => false }
+    PlanPin.get.rawPairs.getOrElse {
+      try {
+        t(s, d, "lineitem").queryExecution.optimizedPlan.stats
+          .sizeInBytes >= BigInt(ShuffleRawMinBytes)
+      } catch { case _: Exception => false }
     }
+
+  /** 64 MB: sf0.1's 10.8 MB lineitem keeps the combining partial
+    * aggregate, sf1's 130 MB routes raw — the measured crossover sits
+    * between them, and on a cluster per-task memory is the same
+    * constraint the byte threshold proxies.
+    */
+  private val ShuffleRawMinBytes = 64L << 20
 
   /** Packing bound on an id domain via its DIMENSION table (TPC-H
     * referential integrity: every l_suppkey/l_partkey references a
@@ -294,37 +292,30 @@ object GraphOps {
         HotCache.withCached(edges.cut()) { e =>
           val deg = e.groupBy("u").agg(count(lit(1)).as("deg"))
             .cut()
-          // Size-aware rank-state join (the d10 guard pattern): the rank
+          // Size-aware rank-state join (BroadcastGuard): the rank
           // table is |nodes| rows — broadcasting it keeps the (much
           // bigger) edge list un-shuffled across all 6 iterations, the
-          // decisive win while nodes fit an executor (~5M rows). Past
-          // the threshold the hint is dropped and every round degrades
-          // loudly to the shuffled join — the only shape possible at
-          // 1e9 nodes.
-          val maxBc = s.conf.getOption("graft.g01.maxBroadcastNodes")
-            .map(_.toLong).getOrElse(5000000L)
-          // One capped count probes BOTH thresholds. The probe limit is
-          // max(broadcast cap, decimal threshold)+1 so the overflow
-          // guard stays live even when the broadcast cap is configured
-          // below 10⁶: with limit(maxBc+1) alone, a small cap would clamp
-          // nCapped under the decimal threshold and the int64 rank mass
-          // could overflow silently on a >10⁶-node graph (r10 ADVICE).
+          // decisive win while nodes fit an executor. Past the cap the
+          // hint is dropped and every round degrades loudly to the
+          // shuffled join — the only shape possible at 1e9 nodes.
+          // One capped count feeds BOTH choices: the cap (5·10⁶) sits
+          // above the decimal threshold, so the accumulator choice below
+          // is decided on an exact count. (A PlanPin cap under 10⁶
+          // clamps the count and keeps int64 — pin decimalRanks too on
+          // a graph that large.)
           val decThreshold = 1000000L
-          val probeLim = (math.max(maxBc, decThreshold) + 1)
-            .min(Int.MaxValue.toLong).toInt
-          val nCapped = deg.limit(probeLim).count()
-          val bcRanks = nCapped <= maxBc
-          def hint(df: DataFrame) = if (bcRanks) broadcast(df) else df
+          val nCapped = BroadcastGuard.rows(deg)
+          val hint = BroadcastGuard.hint("g01", "node table", nCapped)
           // Accumulator type: BIGINT rank mass (N·10¹²) is safe through
           // N ≈ 10⁶ nodes but a hub's contribution sum approaches int64
           // past that — switch to DECIMAL(38,0) automatically (or via
-          // conf for testing). Both paths run the IDENTICAL recurrence:
+          // PlanPin for testing). Both paths run the IDENTICAL recurrence:
           // dfloor is exact floor division (subtract the modulus, then
           // an exactly-representable decimal divide — quotients here are
           // < 10³² so the (38,6) divide result is the exact integer),
           // pinned bit-equal to the int64 path in GraphSpec.
-          val useDec = s.conf.getOption("graft.g01.decimalRanks")
-            .map(_.toBoolean).getOrElse(nCapped > decThreshold)
+          val useDec = PlanPin.get.decimalRanks
+            .getOrElse(nCapped > decThreshold)
           def dfloor(a: Column, b: Column): Column =
             ((a - pmod(a, b)) / b).cast("decimal(38,0)")
           val dec = (v: Long) => lit(v).cast("decimal(38,0)")
@@ -457,17 +448,13 @@ object GraphOps {
         var e = purchaseEdges(s, d).cut()
         // r11: the surviving-node set is |nodes|-bounded, so both
         // per-round semi-joins BROADCAST it while it fits an executor
-        // (size-aware like g01's rank hint — past the cap each round
-        // degrades to the shuffled semi-join, the only shape at 1e9
-        // nodes). keep is checkpointed once per round: the two
+        // (BroadcastGuard, like g01's rank hint — past the cap each
+        // round degrades to the shuffled semi-join, the only shape at
+        // 1e9 nodes). keep is checkpointed once per round: the two
         // semi-join legs otherwise re-ran the degree aggregate twice
         // (rename ≠ same canonical plan, so no exchange reuse).
-        val maxBc = s.conf.getOption("graft.g06.maxBroadcastNodes")
-          .map(_.toLong).getOrElse(5000000L)
-        val probeLim = (maxBc + 1).min(Int.MaxValue.toLong).toInt
-        val nCapped = e.select("u").distinct().limit(probeLim).count()
-        def hint(df: DataFrame) =
-          if (nCapped <= maxBc) broadcast(df) else df
+        val hint = BroadcastGuard.hint("g06", "node set",
+          e.select("u").distinct())
         var out = trace(e, 0)
         for (r <- 1 to 4) {
           val keep = e.groupBy("u").agg(count(lit(1)).as("deg"))
@@ -785,15 +772,11 @@ object GraphOps {
         val edges = purchaseEdges(s, d).cut()
         // r11: frontier and visited are |nodes|-bounded, so the
         // per-round semi/anti joins BROADCAST them while they fit
-        // (size-aware like g01/g06) — the edge list is then never
+        // (BroadcastGuard, like g01/g06) — the edge list is then never
         // shuffled; past the cap each round degrades to the shuffled
         // joins, the only shape at 1e9 nodes.
-        val maxBc = s.conf.getOption("graft.g09.maxBroadcastNodes")
-          .map(_.toLong).getOrElse(5000000L)
-        val probeLim = (maxBc + 1).min(Int.MaxValue.toLong).toInt
-        val nCapped = edges.select("u").distinct().limit(probeLim).count()
-        def hint(df: DataFrame) =
-          if (nCapped <= maxBc) broadcast(df) else df
+        val hint = BroadcastGuard.hint("g09", "node set",
+          edges.select("u").distinct())
         var visited = edges.select(col("u").as("node"))
           .filter(col("node") === 3L).distinct()
           .withColumn("dist", lit(0L)).cut()

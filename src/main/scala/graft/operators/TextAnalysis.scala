@@ -413,17 +413,11 @@ object TextAnalysis {
             log(col("cp").cast("double") / col("cb"))
               .cast("decimal(30,6)").as("l"))
         // r11 (§3.1, t27's twin): the model table is vocab-bounded —
-        // broadcast it under the same conf-gated size probe so the
+        // broadcast it under BroadcastGuard's size probe so the
         // instance stream (one row per corpus bigram) never shuffles
         // for the surprisal join; loud shuffled fallback past the cap.
-        val maxB = s.conf.getOption("graft.t08.maxBroadcastBigrams")
-          .map(_.toLong).getOrElse(5000000L)
-        val fits = bgc.limit((maxB + 1).min(Int.MaxValue.toLong).toInt)
-          .count() <= maxB
-        if (!fits) System.err.println(
-          s"[graft] t08: bigram table exceeds $maxB rows - " +
-            "falling back to a shuffle join")
-        inst.join(if (fits) broadcast(ll) else ll, "bg")
+        val hint = BroadcastGuard.hint("t08", "bigram table", bgc)
+        inst.join(hint(ll), "bg")
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_bigrams"), sum("l").as("sl"))
           .select(col("doc_id"), col("n_bigrams"),
@@ -1386,17 +1380,11 @@ object TextAnalysis {
         // (an early-terminating limit scan), and past the cap the join
         // degrades loudly to the shuffled shape — the only one when the
         // train vocab outgrows an executor.
-        val maxB = s.conf.getOption("graft.t27.maxBroadcastBigrams")
-          .map(_.toLong).getOrElse(5000000L)
-        val fits = cb.limit((maxB + 1).min(Int.MaxValue.toLong).toInt)
-          .count() <= maxB
-        if (!fits) System.err.println(
-          s"[graft] t27: train bigram table exceeds $maxB rows - " +
-            "falling back to a shuffle join")
+        val hint = BroadcastGuard.hint("t27", "train bigram table", cb)
         docs.filter(col("doc_id") % 2 === 1)
           .select(col("doc_id"),
             explode(TextFns.shingles(col("tk"), 2)).as("bg"))
-          .join(if (fits) broadcast(ll) else ll, Seq("bg"), "left")
+          .join(hint(ll), Seq("bg"), "left")
           .crossJoin(broadcast(v))
           .filter(col("v") > 0)
           .withColumn("oov", when(col("l").isNull, 1L).otherwise(0L))

@@ -400,11 +400,10 @@ object ScaleProbe {
           .toSeq
       var i64: Seq[(String, Long, BigDecimal)] = Nil
       var dec: Seq[(String, Long, BigDecimal)] = Nil
-      spark.conf.set("graft.g01.decimalRanks", "false")
-      row(n, "g01i64") { i64 = ranks(); i64.length.toLong }
-      spark.conf.set("graft.g01.decimalRanks", "true")
-      row(n, "g01dec") { dec = ranks(); dec.length.toLong }
-      spark.conf.unset("graft.g01.decimalRanks")
+      def ranksPinned(decimal: Boolean) = graft.operators.PlanPin
+        .during(graft.operators.PlanPin(decimalRanks = Some(decimal)))(ranks())
+      row(n, "g01i64") { i64 = ranksPinned(false); i64.length.toLong }
+      row(n, "g01dec") { dec = ranksPinned(true); dec.length.toLong }
       println(if (i64 == dec) s"$n g01 decimal == int64 (top-20 bit-equal)"
               else s"$n g01 DIVERGED: $i64 vs $dec")
       graft.operators.HotCache.releaseAll()

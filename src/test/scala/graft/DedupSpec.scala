@@ -4,28 +4,8 @@ import java.nio.file.Files
 
 class DedupSpec extends SparkSpecBase {
 
-  /** Planted corpus: 0/1 exact dups, 2/3 near dups (one word changed),
-    * 4 unrelated, 5 a shuffled-token copy of 0 (same token set).
-    */
-  lazy val plantedDir: String = {
-    val dir = Files.createTempDirectory("graft-docs").toString
-    import spark.implicits._
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-      "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    val near = base.replace("sigma", "SIGMA2")
-    val docs = Seq(
-      (0L, base, "en", base.length.toLong),
-      (1L, base, "en", base.length.toLong),
-      (2L, near, "en", near.length.toLong),
-      (3L, base, "de", base.length.toLong),
-      (4L, "totally different words nothing shared here at all by design " +
-        "zero overlap with anything else whatsoever in this tiny corpus",
-        "en", 120L),
-      (5L, base.split(" ").reverse.mkString(" "), "en", base.length.toLong))
-      .toDF("doc_id", "text", "lang", "n_chars")
-    docs.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
-  }
+  /** Planted corpus (see [[Planted.docs]]). */
+  lazy val plantedDir: String = Planted.docs(spark)
 
   test("d01 exact dedup groups identical texts") {
     val rows = run("d01_dedup_exact", plantedDir).collect()
@@ -239,30 +219,8 @@ class DedupSpec extends SparkSpecBase {
     assert(e.getMessage.contains("pins 4 LSH planes"), e.getMessage)
   }
 
-  /** d10 planted corpus: batch = doc_id % 7 == 3 → ids 3, 10, 17, 24, 31;
-    * everything else base. Includes NULL-text docs on both sides: they
-    * must be CLASSIFIED (digest of the empty string), never dropped.
-    */
-  lazy val d10Dir: String = {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-incr").toString
-    val baseTxt = "shared corpus text already present in the base"
-    val batchDup = "this text appears twice inside the new batch only"
-    Seq(
-      (0L, baseTxt), (1L, "some base only text"), (2L, "other base text"),
-      (7L, null: String), // base: NULL text → digest of ''
-      (3L, baseTxt),   // batch: digest exists in base
-      (10L, batchDup), // batch: first sighting of an intra-batch dup pair
-      (17L, batchDup), // batch: later sighting of the same digest
-      (24L, "genuinely novel increment text"), // batch: new
-      (31L, null: String)) // batch NULL text: dup of base doc 7's ''
-      .map { case (id, txt) =>
-        (id, txt, "en", Option(txt).map(_.length.toLong).getOrElse(0L), "src1")
-      }
-      .toDF("doc_id", "text", "lang", "n_chars", "source")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
-  }
+  /** d10 planted corpus (see [[Planted.incrementalDocs]]). */
+  lazy val d10Dir: String = Planted.incrementalDocs(spark)
 
   private val d10Expected = Map(3L -> "dup_of_base", 10L -> "new",
     17L -> "dup_in_batch", 24L -> "new", 31L -> "dup_of_base")
@@ -272,24 +230,6 @@ class DedupSpec extends SparkSpecBase {
     val got = run("d10_incremental_dedup", d10Dir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("status")).toMap
     assert(got == d10Expected)
-  }
-
-  test("d10 red path: oversized increment drops broadcast hints, falls " +
-    "back to shuffle joins, same answer") {
-    spark.conf.set("graft.d10.maxBroadcastRows", "1")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val df = run("d10_incremental_dedup", d10Dir)
-      val got = df.collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("status")).toMap
-      assert(got == d10Expected) // fallback must not change verdicts
-      val p = df.queryExecution.executedPlan.toString // final AQE plan
-      assert(p.contains("SortMergeJoin"), p)
-      assert(!p.contains("BroadcastHashJoin"), p)
-    } finally {
-      spark.conf.unset("graft.d10.maxBroadcastRows")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
   }
 
   test("d06 embedding near-dups on real sf data stay within label blocks") {
@@ -473,28 +413,6 @@ class DedupSpec extends SparkSpecBase {
       (3L * 10000L + (np16 - 3L) * 7142L) / np16, b16)
     // the near pairs all land in ONE bucket (docs 0/1/3 share one sig)
     assert(rows.length <= 2, rows.toSeq)
-  }
-
-  test("d13 red path: oversized shared sliver drops the broadcast, " +
-    "falls back to a shuffle join, same answer") {
-    val want = run("d13_span_dedup", plantedDir).collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        ((r.getAs[Long]("n_spans"), r.getAs[Long]("n_shared")))).toMap
-    spark.conf.set("graft.d13.maxBroadcastSpans", "0")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val df = run("d13_span_dedup", plantedDir)
-      val got = df.collect()
-        .map(r => r.getAs[Long]("doc_id") ->
-          ((r.getAs[Long]("n_spans"), r.getAs[Long]("n_shared")))).toMap
-      assert(got == want) // fallback must not change counts
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("SortMergeJoin"), p)
-      assert(!p.contains("BroadcastHashJoin"), p)
-    } finally {
-      spark.conf.unset("graft.d13.maxBroadcastSpans")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
   }
 
   test("d15 soft-dedup weights: per-group mass conserved, one canonical") {

@@ -5,31 +5,8 @@ import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpecBase {
 
-  /** Planted purchase graph: customer 1 buys from suppliers 10, 11, 12
-    * (a hub), customers 2 and 3 buy only from supplier 10, customer 4
-    * buys only from supplier 12. Supplier 10 (degree 3) and customer 1
-    * (degree 3) are the two structural hubs; supplier 11 is a leaf seen
-    * by the hub customer only.
-    */
-  lazy val plantedDir: String = {
-    val dir = Files.createTempDirectory("graft-graph").toString
-    import spark.implicits._
-    // orders: (o_orderkey, o_custkey); lineitem: (l_orderkey, l_suppkey)
-    val pairs = Seq( // (custkey, suppkey) purchase pairs
-      (1L, 10L), (1L, 11L), (1L, 12L),
-      (2L, 10L), (3L, 10L), (4L, 12L))
-    val orders = pairs.zipWithIndex
-      .map { case ((c, _), i) => (i.toLong, c) }
-      .toDF("o_orderkey", "o_custkey")
-    val lineitem = pairs.zipWithIndex
-      .map { case ((_, su), i) => (i.toLong, su) }
-      .toDF("l_orderkey", "l_suppkey")
-    orders.coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/orders.parquet")
-    lineitem.coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/lineitem.parquet")
-    dir
-  }
+  /** Planted purchase graph (see [[Planted.purchaseGraph]]). */
+  lazy val plantedDir: String = Planted.purchaseGraph(spark)
 
   test("g01 ranks the structural hubs first on the planted graph") {
     val rows = run("g01_pagerank", plantedDir).collect()
@@ -76,24 +53,10 @@ class GraphSpec extends SparkSpecBase {
     }.toSeq
     for (dir <- Seq(plantedDir, sf)) {
       val int64 = ranksOf(dir)
-      spark.conf.set("graft.g01.decimalRanks", "true")
-      try {
-        val dec = ranksOf(dir)
-        assert(dec == int64, s"decimal path diverged on $dir")
-      } finally spark.conf.unset("graft.g01.decimalRanks")
+      val dec = operators.PlanPin.during(
+        operators.PlanPin(decimalRanks = Some(true)))(ranksOf(dir))
+      assert(dec == int64, s"decimal path diverged on $dir")
     }
-  }
-
-  test("g01 shuffle fallback (ranks over the broadcast cap) is identical") {
-    // the size-aware hint is an optimization, never a semantic: with the
-    // cap forced below |nodes|, every iteration runs the shuffled join
-    // and the ranks must match the broadcast path bit-for-bit
-    val fast = run("g01_pagerank", plantedDir).collect().map(_.toSeq).toSet
-    spark.conf.set("graft.g01.maxBroadcastNodes", "1")
-    try {
-      val slow = run("g01_pagerank", plantedDir).collect().map(_.toSeq).toSet
-      assert(slow == fast)
-    } finally spark.conf.unset("graft.g01.maxBroadcastNodes")
   }
 
   test("g02 degree histogram matches the planted structure") {
@@ -363,5 +326,29 @@ class GraphSpec extends SparkSpecBase {
     assert(sfRows.length <= 10)
     val degs = sfRows.map(_.getAs[Long]("deg"))
     assert(degs.sameElements(degs.sortBy(-(_: Long))))
+  }
+
+  test("pairCounts over Int-typed id arrays equals a naive self-join count") {
+    // 32-bit ids: the packed s1<<32|s2 key must widen them to long first
+    // — an int shifted by 32 is unchanged, so (1,2), (1,3) and (2,3)
+    // would all pack to 3. Ids past 2^16 and 2^31-1 itself cover the
+    // high bits of each half.
+    import spark.implicits._
+    val top = Int.MaxValue
+    val groups = Seq(Seq(1, 2, 3), Seq(1, 2), Seq(2, 3, 70000),
+      Seq(1, 70000, top), Seq(3, top), Seq(5))
+      .zipWithIndex.map { case (ids, g) => (g, ids.sorted) }
+      .toDF("g", "arr")
+    val got = operators.GraphOps.pairCounts(groups, "arr", "n", top.toLong)
+      .collect().map(r => (r.getAs[Number]("s1").longValue,
+        r.getAs[Number]("s2").longValue, r.getAs[Long]("n"))).toSet
+    val ids = groups.select(col("g"), explode(col("arr")).as("id"))
+    val naive = ids.as("a").join(ids.as("b"),
+        col("a.g") === col("b.g") && col("a.id") < col("b.id"))
+      .groupBy(col("a.id"), col("b.id")).count()
+      .collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong,
+        r.getLong(2))).toSet
+    assert(naive.contains((1L, 2L, 2L)) && naive.size == 9, naive)
+    assert(got == naive)
   }
 }
