@@ -1,11 +1,8 @@
 package graft
 
 import java.util.Locale
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.GraftCoreShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract). Design constraints, learned the hard
   * way across rounds:
@@ -14,30 +11,58 @@ import org.apache.spark.sql.SparkSession
   *    process exits nonzero — a timing line alone cannot distinguish
   *    "fast" from "crashed before doing the work" (r3's q38 did exactly
   *    that).
-  *  - COMPLETE: the final line prints FULL query keys (2-decimal
-  *    seconds) — the driver's per-query comparison matches stdout keys
-  *    against query names verbatim, and the r08-r11 short-key scheme
-  *    broke it silently for four rounds. The full-precision timings plus
-  *    per-query shuffle bytes go to `bench_full.json` (committed with
-  *    the repo, so the judge can read the complete artifact even if the
-  *    driver clips stdout).
-  *  - MEASURED: a SparkListener attributes shuffle read/write bytes to
-  *    each query — the Spark-native equivalent of the reference's
-  *    per-node metrics monitor (metrics-monitor/metricsMonitor.py:1-193)
-  *    and a mechanical plan-regression tripwire: a query whose shuffle
+  *  - COMPLETE: `bench_full.json` carries every key under its FULL
+  *    name (the r08-r11 short-key scheme broke the per-query match
+  *    against query names silently for four rounds) with 3-decimal
+  *    seconds, shuffle read/write bytes, cpu and run time. The final
+  *    stdout line is the summary only, with no per-key data: a runner
+  *    that keeps only the last ~2 KB of stdout must still parse it as
+  *    JSON.
+  *  - MEASURED: [[Meter]] attributes shuffle read/write bytes to each
+  *    query — a mechanical plan-regression tripwire: a query whose shuffle
   *    bytes jump 10x between rounds changed plan shape, whatever the
   *    wall-clock noise says.
   */
 object Bench {
+
+  /** Untimed warm-up: JVM/codegen/shuffle machinery and parquet footers,
+    * so the alphabetically-first query doesn't absorb session startup.
+    * Tables absent from `dir` (a generated corpus holds only some) are
+    * skipped.
+    */
+  private[graft] def warmUp(spark: SparkSession, dir: String): Unit = {
+    spark.range(0, 1000000, 1, 4).selectExpr("sum(id)").collect()
+    Tables.all.filter(Tables.fingerprint(spark, dir, _).isDefined)
+      .foreach(n => Tables(spark, dir, n).limit(1).collect())
+  }
+
+  /** One pass of a key: build and save it through the noop sink — a bare
+    * count() would let Catalyst prune projections and skip the real work
+    * — then release HotCache. Returns whether the pass succeeded, and the
+    * cost of the build and save.
+    *
+    * HotCache is released AFTER each timed save, not once post-loop: every
+    * query is timed cold, and the CacheManager can never substitute a
+    * previous query's cached subtree into a later sameResult plan
+    * regardless of name order.
+    */
+  private[graft] def pass(spark: SparkSession, dir: String, name: String,
+                          fn: (SparkSession, String) => DataFrame)
+      : (Boolean, Meter.Cost) = {
+    val measured = Meter.measure(spark) {
+      try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        false
+      }
+    }
+    graft.operators.HotCache.releaseAll()
+    measured
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // parsed once: the value is interpolated into JSON artifacts, where a
-    // non-numeric string would silently produce unparseable output
-    val cpusRaw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val cpus = try cpusRaw.trim.toInt catch {
-      case _: NumberFormatException =>
-        sys.error(s"SPARK_GRAFT_CPUS must be an integer core count, got '$cpusRaw'")
-    }
+    val cpus = GraftSession.cpus
     // Iteration aid matching Verify's switch: bench a comma-list of keys
     // in isolation (cold JVM — separates real regressions from same-JVM
     // heap/JIT pressure late in a 190-query run). Filtered runs never
@@ -57,36 +82,8 @@ object Bench {
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
       if (only.isDefined) "/tmp/bench_only.json" else "bench_full.json")
     val spark = GraftSession.local(cpus, "graft-bench")
+    warmUp(spark, sfDir)
 
-    // Shuffle-byte counters, fed by every finished task; deltas between
-    // drained snapshots give per-query attribution.
-    val shufRead = new AtomicLong
-    val shufWrite = new AtomicLong
-    // Task CPU time is the deterministic work metric: wall-clock swings
-    // ~2x with box load (r6's s03 lesson) while summed executorCpuTime
-    // stays ~flat, so round-over-round regressions can be separated from
-    // scheduler noise without rerunning on an idle box.
-    val cpuNs = new AtomicLong
-    val runMs = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          cpuNs.addAndGet(m.executorCpuTime)
-          runMs.addAndGet(m.executorRunTime)
-        }
-      }
-    })
-
-    // Untimed warm-up: JVM/codegen/shuffle machinery and parquet footers,
-    // so the alphabetically-first query doesn't absorb session startup.
-    spark.range(0, 1000000, 1, 4).selectExpr("sum(id)").collect()
-    Tables.all.foreach(n => Tables(spark, sfDir, n).limit(1).collect())
-
-    // Force FULL computation of every operator via the noop sink — a bare
-    // count() would let Catalyst prune projections and skip the real work.
     final case class R(name: String, sec: Double, rdB: Long, wrB: Long,
                        cpuMs: Long, runMs: Long,
                        cpuAll: Seq[Long] = Nil, secAll: Seq[Double] = Nil,
@@ -96,28 +93,15 @@ object Bench {
     // appended to `failed` once PER failing rep, and a key that passed
     // rep 1 but failed rep 2 reported a successful timing row while also
     // appearing in failed[] — contradictory artifact state (r10 ADVICE).
-    def once(name: String,
-             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    // Task CPU time is the deterministic work metric: wall-clock swings
+    // ~2x with box load (r6's s03 lesson) while summed executorCpuTime
+    // stays ~flat, so round-over-round regressions can be separated from
+    // scheduler noise without rerunning on an idle box.
+    def once(name: String, fn: (SparkSession, String) => DataFrame)
         : (R, Boolean) = {
-      GraftCoreShim.drainListenerBus(spark.sparkContext)
-      val r0 = shufRead.get; val w0 = shufWrite.get
-      val c0 = cpuNs.get; val e0 = runMs.get
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // Release cached intermediates (d09, p06b, t07) AFTER each timed
-      // save, not once post-loop: every query is timed cold, and the
-      // CacheManager can never substitute a previous query's cached
-      // subtree into a later sameResult plan regardless of name order.
-      graft.operators.HotCache.releaseAll()
-      GraftCoreShim.drainListenerBus(spark.sparkContext)
-      (R(name, sec, shufRead.get - r0, shufWrite.get - w0,
-        (cpuNs.get - c0) / 1000000, runMs.get - e0), ok)
+      val (ok, c) = pass(spark, sfDir, name, fn)
+      (R(name, c.wallSec, c.shuffleReadB, c.shuffleWriteB, c.cpuMs, c.runMs),
+        ok)
     }
     // A key is UNSTABLE when its reps disagree > 2x on cpu_ms — the r10
     // driver run proved executorCpuTime itself inflates ~26x under

@@ -148,6 +148,19 @@ object Timestamps {
   * (/root/reference/spark-code/.../CherryShuffleService.scala).
   */
 object GraftSession {
+
+  /** The local core count every main runs with: `SPARK_GRAFT_CPUS`,
+    * default 4. A non-integer value fails here, before it can reach a
+    * session or a JSON artifact.
+    */
+  def cpus: Int = {
+    val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    try raw.trim.toInt catch {
+      case _: NumberFormatException =>
+        sys.error(s"SPARK_GRAFT_CPUS must be an integer core count, got '$raw'")
+    }
+  }
+
   def local(cores: Int = 4, appName: String = "graft"): SparkSession = {
     val s = SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)

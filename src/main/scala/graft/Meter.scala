@@ -1,0 +1,80 @@
+package graft
+
+import scala.collection.mutable
+
+import org.apache.spark.GraftCoreShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
+
+/** Cost attribution for one block of driver code: the Spark-native
+  * equivalent of the reference's per-node metrics monitor
+  * (metrics-monitor/metricsMonitor.py:1-193), scoped to a block instead of
+  * a node. Bench, `tools.Profile`, `tools.ShuffleStats` and the specs that
+  * count jobs or bytes all measure through [[measure]].
+  */
+object Meter {
+
+  /** What the tasks of one stage (all attempts) reported. `name` is empty
+    * for a stage submitted before the block began.
+    */
+  final case class Stage(id: Int, name: String, tasks: Int, cpuNs: Long,
+                         runMs: Long, shuffleReadB: Long,
+                         shuffleWriteB: Long, inputB: Long)
+
+  /** The cost of a block: its wall time alone, the jobs it started, and
+    * every task that ended inside it, by stage in submission order.
+    */
+  final case class Cost(wallSec: Double, jobs: Int, stages: Seq[Stage]) {
+    def tasks: Int = stages.map(_.tasks).sum
+    def cpuMs: Long = stages.map(_.cpuNs).sum / 1000000
+    def runMs: Long = stages.map(_.runMs).sum
+    def shuffleReadB: Long = stages.map(_.shuffleReadB).sum
+    def shuffleWriteB: Long = stages.map(_.shuffleWriteB).sum
+    def inputB: Long = stages.map(_.inputB).sum
+  }
+
+  /** Runs `body` and returns its result with its cost. The listener bus is
+    * drained before and after: task-end events post asynchronously, so
+    * without the drains the tail of one block's tasks would be credited to
+    * the next block.
+    */
+  def measure[A](spark: SparkSession)(body: => A): (A, Cost) = {
+    val sc = spark.sparkContext
+    val stages = mutable.LinkedHashMap.empty[Int, Stage]
+    var jobs = 0
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        stages.synchronized(jobs += 1)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.synchronized {
+          val id = e.stageInfo.stageId
+          if (!stages.contains(id))
+            stages(id) = Stage(id, e.stageInfo.name, 0, 0, 0, 0, 0, 0)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        stages.synchronized {
+          val s = stages.getOrElse(e.stageId,
+            Stage(e.stageId, "", 0, 0, 0, 0, 0, 0))
+          val m = e.taskMetrics
+          stages(e.stageId) =
+            if (m == null) s.copy(tasks = s.tasks + 1)
+            else s.copy(tasks = s.tasks + 1,
+              cpuNs = s.cpuNs + m.executorCpuTime,
+              runMs = s.runMs + m.executorRunTime,
+              shuffleReadB = s.shuffleReadB + m.shuffleReadMetrics.totalBytesRead,
+              shuffleWriteB = s.shuffleWriteB + m.shuffleWriteMetrics.bytesWritten,
+              inputB = s.inputB + m.inputMetrics.bytesRead)
+        }
+    }
+    GraftCoreShim.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      val a = body
+      val wall = (System.nanoTime() - t0) / 1e9
+      GraftCoreShim.drainListenerBus(sc)
+      stages.synchronized((a, Cost(wall, jobs, stages.values.toSeq)))
+    } finally sc.removeSparkListener(listener)
+  }
+}

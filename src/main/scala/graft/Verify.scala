@@ -5,8 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim.toInt
-    val spark = GraftSession.local(cpus, "graft-verify")
+    val spark = GraftSession.local(GraftSession.cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // If the corpus outgrew the pinned 4-plane d06b/d09 oracle SQL,
     // fail THOSE keys loudly (no dump → red CORRECTNESS rows with this

@@ -23,7 +23,7 @@ object AggFns {
     * every double, while skipping one BigDecimal round-trip per row.
     * Measured: 0 differing rows across price/revenue/charge shapes on
     * 600k rows, and the 3-sum q01 aggregation drops 1.85 s → 1.17 s
-    * (tools/RoundProbe.scala). The DuckDB twin (sqlDsumRaw) KEEPS its
+    * (NOTES_r9.md, "dsum fast path"). The DuckDB twin (sqlDsumRaw) KEEPS its
     * explicit round(x, 6): DuckDB's double→decimal cast rounds the
     * binary value, not the shortest repr, so dropping round there could
     * flip k.5-boundary rows — the engines meet at the rounded VALUE, not

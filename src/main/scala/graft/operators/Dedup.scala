@@ -744,16 +744,17 @@ object Dedup {
     // result itself is hash-verified. The oracle pins nPlanes = 4 —
     // what the adaptive sizing resolves to at the fixed 500-row
     // embeddings table every SF ships (TESTDATA.md); the recall spec
-    // and ScaleProbe cover the larger-corpus sizing behavior.
+    // and the ScaleProbe corpora (PROBE_r5, PROBE_r8) cover the
+    // larger-corpus sizing behavior.
     "d06b_dedup_embedding_lsh" -> QueryDef(
       build = (s, d) => {
         // plane count sized to the corpus: each extra plane halves the
         // expected (label, bucket) block, so planes ≈ log2(rows/label /
         // targetBlock) keeps per-block pair work bounded as the corpus
         // grows (with 10 labels and target blocks of ~256 vectors).
-        // Fixed planes are quadratic in disguise: ScaleProbe measured
-        // 4-plane d06b at 22 s / 296 s for 50k / 200k vectors (blocks of
-        // n/10 make pair counts O(n²)); adaptive planes restore ~linear
+        // Fixed planes are quadratic in disguise: 4-plane d06b measured
+        // 22 s / 296 s for 50k / 200k vectors in r3 (cited in PROBE_r5;
+        // blocks of n/10 make pair counts O(n²)); adaptive planes restore ~linear
         // growth while planted cos≈0.9999 pairs keep recall 1.0.
         // Corpus size via the memoized metadata-only count — one cheap
         // job per file set, never stale catalog stats (see corpusRows).

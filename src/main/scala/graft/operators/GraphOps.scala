@@ -74,7 +74,7 @@ object GraphOps {
   /** Ordered-pair stream off a SORTED distinct array column: one output
     * row per unordered pair (s1 < s2), plus the pass-through columns in
     * `keep`. r11 second pass (§4 expression choice, measured on g08's
-    * pair stage with E33Probe): the previous
+    * pair stage's per-stage cpu, OPTIMIZATION_r11.md): the previous
     * `explode(flatten(transform(arr, (x,i) -> transform(slice(..),
     * y -> struct(x,y)))))` chain runs as INTERPRETED expression code —
     * it copies a suffix slice per element, builds a struct PER PAIR and
@@ -111,8 +111,8 @@ object GraphOps {
     * shape (e.g. partkeys cross 2^32 near SF ~21k, ~21 TB).
     */
   private[graft] def pairCounts(df: DataFrame, arr: String,
-                                cnt: String, idBound: => Long,
-                                rawRoute: => Boolean = false)
+                                cnt: String, idBound: Long,
+                                rawRoute: Boolean = false)
       : DataFrame = {
     // r12 (§2.2/§5, VERDICT item 3 — the pair-agg spill at scale): when
     // `rawRoute` (scale-derived, see pairAggRaw) the raw packed pair

@@ -202,7 +202,7 @@ object TrainingPipeline {
     // WITHOUT a per-lang single-task window — the same two-pass
     // (lang × 256-bucket) offset scheme as x02: tiny per-bucket totals
     // table broadcast back, local window per bucket. ~Flat per-row cost
-    // as any one lang grows (ScaleProbe-proven for the x02 twin).
+    // as any one lang grows (measured for the x02 twin: PROBE_r5, r6, r8).
     "p02_seq_pack" -> QueryDef(
       build = (s, d) => {
         val base = t(s, d, "documents").select(

@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object CacheDemo {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "cache-demo")
+    val spark = GraftSession.local(GraftSession.cpus, "cache-demo")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     def time[A](label: String)(f: => A): A = {

@@ -9,7 +9,8 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = graft.GraftSession.local(4, "graft-explain")
+    val spark =
+      graft.GraftSession.local(graft.GraftSession.cpus, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,9 +1,7 @@
 package graft.tools
 
-import graft.GraftSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.{GraftSession, Meter}
 import org.apache.spark.sql.functions._
-import java.util.concurrent.atomic.AtomicLong
 
 /** Measures what the reference attacks with a shuffle-service daemon —
   * shuffle traffic — and shows the plan-side answer. Runs the reference's
@@ -22,28 +20,12 @@ object ShuffleStats {
     val partitions = if (args.length > 0) args(0).toInt else 100
     val size = if (args.length > 1) args(1).toDouble else 0.02
     val n = (10000000L * size).toLong
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "shuffle-stats")
+    val spark = GraftSession.local(GraftSession.cpus, "shuffle-stats")
     import spark.implicits._
 
-    val written = new AtomicLong(); val read = new AtomicLong()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          written.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        }
-      }
-    })
-
     def measure(label: String)(work: => Unit): Unit = {
-      written.set(0); read.set(0)
-      val t0 = System.nanoTime()
-      work
-      Thread.sleep(500) // let straggler task-end events drain
-      val secs = (System.nanoTime() - t0) / 1e9 - 0.5
-      println(f"$label%-28s ${secs}%6.2f s   shuffle write ${written.get / 1e6}%10.2f MB   read ${read.get / 1e6}%10.2f MB")
+      val c = Meter.measure(spark)(work)._2
+      println(f"$label%-28s ${c.wallSec}%6.2f s   shuffle write ${c.shuffleWriteB / 1e6}%10.2f MB   read ${c.shuffleReadB / 1e6}%10.2f MB")
     }
 
     val payload = rpad(hex(xxhash64(col("id"))), 100, "x")

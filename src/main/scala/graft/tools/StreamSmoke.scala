@@ -12,7 +12,7 @@ import java.sql.Timestamp
   */
 object StreamSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(4, "stream-smoke")
+    val spark = GraftSession.local(GraftSession.cpus, "stream-smoke")
     import spark.implicits._
     implicit val sc = spark.sqlContext
 

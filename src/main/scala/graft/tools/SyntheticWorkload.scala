@@ -24,8 +24,7 @@ object SyntheticWorkload {
     val skewness = if (args.length > 2) args(2).toDouble else 0.0
     val n = (10000000L * size).toLong
 
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "synthetic-workload")
+    val spark = GraftSession.local(GraftSession.cpus, "synthetic-workload")
 
     // Deterministic stand-in for the reference's random 100-char payload:
     // same byte volume, reproducible.

@@ -1,9 +1,10 @@
 package org.apache.spark
 
-/** Core-side bridge (the sql-side one is o.a.s.sql.GraftShim): Bench
-  * attributes shuffle bytes to individual queries via a SparkListener,
-  * and task-end events post asynchronously — without draining the bus
-  * between queries, bytes from query N would be credited to query N+1.
+/** Core-side bridge (the sql-side one is o.a.s.sql.GraftShim):
+  * `graft.Meter` attributes task metrics to blocks of code via a
+  * SparkListener, and task-end events post asynchronously — without
+  * draining the bus between blocks, bytes from block N would be credited
+  * to block N+1.
   * `listenerBus` is private[spark], hence this shim.
   */
 object GraftCoreShim {

@@ -142,6 +142,20 @@ class GraphSpec extends SparkSpecBase {
     assert(got((10L, 11L)) == ((2L, 4000L)), got)
   }
 
+  test("g05 without a supplier table reports its failed id-bound probe once") {
+    // the absent table is never memoized, so each evaluation of the bound
+    // re-runs the failing read and prints its fallback line again
+    val dir = Planted.purchaseGraph(spark)
+    val buf = new java.io.ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true))
+    try run("g05_supplier_overlap", dir)
+    finally System.setErr(saved)
+    val lines = buf.toString.linesIterator
+      .filter(_.contains("cannot probe supplier.s_suppkey")).toSeq
+    assert(lines.length == 1, buf.toString)
+  }
+
   test("g06 k-core peels the pendant, keeps the K33 core, reaches a fixed point") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-kcore").toString

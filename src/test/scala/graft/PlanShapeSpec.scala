@@ -567,22 +567,11 @@ class PlanShapeSpec extends SparkSpecBase {
     // bytes — every events access is a cache hit
     graft.operators.HotCache.releaseAll()
     run("e03_sessionize").collect()
-    val inBytes = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          inBytes.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    }
-    org.apache.spark.GraftCoreShim.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      family.drop(1).foreach(k => run(k).collect())
-      org.apache.spark.GraftCoreShim.drainListenerBus(spark.sparkContext)
-      val mb = inBytes.get / 1e6
-      assert(inBytes.get < 1000000L,
-        f"family re-read $mb%.1f MB from files after the cache was filled")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val inBytes = Meter.measure(spark)(
+      family.drop(1).foreach(k => run(k).collect()))._2.inputB
+    val mb = inBytes / 1e6
+    assert(inBytes < 1000000L,
+      f"family re-read $mb%.1f MB from files after the cache was filled")
     graft.operators.HotCache.releaseAll()
   }
 

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -43,21 +42,8 @@ class TablesSpec extends SparkSpecBase {
       }))
     }
 
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftCoreShim.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.GraftCoreShim.drainListenerBus(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    jobs.get
-  }
+  private def jobsDuring(body: => Unit): Int =
+    Meter.measure(spark)(body)._2.jobs
 
   private def withConf[A](k: String, v: String)(body: => A): A = {
     val saved = spark.conf.getOption(k)
