@@ -4,8 +4,9 @@ import scala.collection.mutable
 
 import org.apache.spark.GraftCoreShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted, SparkListenerTaskEnd}
+  SparkListenerStageSubmitted, SparkListenerTaskEnd, StageInfo}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Cost attribution for one block of driver code: the Spark-native
   * equivalent of the reference's per-node metrics monitor
@@ -15,8 +16,12 @@ import org.apache.spark.sql.SparkSession
   */
 object Meter {
 
-  /** What the tasks of one stage (all attempts) reported. `name` is empty
-    * for a stage submitted before the block began.
+  /** What the tasks of one stage (all attempts) reported. `name` is the
+    * stage's operators: `sql <id>: ` (the SQL execution id of the job that
+    * submitted it) and then its RDDs' operation scopes in data-flow order,
+    * e.g. `sql 7: WholeStageCodegen (1) > Exchange`; Spark's call-site name
+    * for a stage without scopes; empty for a stage submitted before the
+    * block began.
     */
   final case class Stage(id: Int, name: String, tasks: Int, cpuNs: Long,
                          runMs: Long, shuffleReadB: Long,
@@ -34,6 +39,12 @@ object Meter {
     def inputB: Long = stages.map(_.inputB).sum
   }
 
+  private def name(info: StageInfo, execId: Option[String]): String = {
+    val scopes = GraftCoreShim.scopeNames(info)
+    val ops = if (scopes.isEmpty) info.name else scopes.mkString(" > ")
+    execId.fold(ops)(x => s"sql $x: $ops")
+  }
+
   /** Runs `body` and returns its result with its cost. The listener bus is
     * drained before and after: task-end events post asynchronously, so
     * without the drains the tail of one block's tasks would be credited to
@@ -43,14 +54,20 @@ object Meter {
     val sc = spark.sparkContext
     val stages = mutable.LinkedHashMap.empty[Int, Stage]
     var jobs = 0
+    val execIds = mutable.HashMap.empty[Int, String] // stage id → SQL execution id
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        stages.synchronized(jobs += 1)
+        stages.synchronized {
+          jobs += 1
+          Option(e.properties)
+            .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+            .foreach(x => e.stageIds.foreach(execIds(_) = x))
+        }
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         stages.synchronized {
           val id = e.stageInfo.stageId
           if (!stages.contains(id))
-            stages(id) = Stage(id, e.stageInfo.name, 0, 0, 0, 0, 0, 0)
+            stages(id) = Stage(id, name(e.stageInfo, execIds.get(id)), 0, 0, 0, 0, 0, 0)
         }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         stages.synchronized {

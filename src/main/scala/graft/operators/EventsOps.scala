@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.functions.AggFns
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -449,8 +450,8 @@ object EventsOps {
         val perUser = ev.groupBy("user_id").agg(
           max(unix_micros(col("ts").cast("timestamp"))).as("last_us"),
           count(lit(1)).as("f"),
-          sum(when(col("event_type") === "purchase", col("value"))
-            .cast("decimal(30,6)")).as("mon"))
+          AggFns.dsumRaw(when(col("event_type") === "purchase", col("value")))
+            .as("mon"))
         val mx = ev.agg(max(unix_micros(col("ts").cast("timestamp")))
           .as("mx_us"))
         perUser.crossJoin(broadcast(mx))

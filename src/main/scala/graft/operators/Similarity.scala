@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import graft.functions.VectorFns
+import graft.functions.{AggFns, VectorFns}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1007,7 +1007,7 @@ object Similarity {
             VectorFns.cosine(col("embedding"), col("cv")).as("cos"))
           .groupBy("cell")
           .agg(count(lit(1)).as("n_vecs"),
-            round(sum(col("cos").cast("decimal(30,6)")).cast("double") /
+            round(AggFns.dsumRaw(col("cos")).cast("double") /
               count(lit(1)), 4).as("avg_cos"),
             round(min("cos"), 4).as("min_cos"))
           .orderBy("cell")
@@ -1525,7 +1525,7 @@ object Similarity {
                 / greatest(col("a"), col("b"))).as("sil"))
         per.groupBy("cell")
           .agg(count(lit(1)).as("n_vecs"),
-            round(sum(col("sil").cast("decimal(30,6)")).cast("double") /
+            round(AggFns.dsumRaw(col("sil")).cast("double") /
               count(lit(1)), 4).as("avg_sil"),
             round(min("sil"), 4).as("min_sil"))
           .orderBy("cell")
@@ -1679,7 +1679,7 @@ object Similarity {
           .select(col("label"), (col("vec_id") % 2).as("half"),
             posexplode(col("embedding")).as(Seq("pos", "v")))
           .groupBy("label", "half", "pos")
-          .agg((sum(col("v").cast("decimal(30,6)")).cast("double") /
+          .agg((AggFns.dsumRaw(col("v")).cast("double") /
             count(lit(1))).as("mv"))
           .groupBy("label", "half")
           .agg(map_from_arrays(collect_list("pos"), collect_list("mv"))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import graft.functions.TextFns
+import graft.functions.{AggFns, TextFns}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -253,8 +253,8 @@ object TextAnalysis {
           .agg(sum("n").as("tot"),
             // the decimal cast IS the 6-dp HALF_UP rounding (AggFns
             // .dsumRaw's proof) — no explicit round() needed per row
-            sum((col("n") * log(col("n").cast("double")))
-              .cast("decimal(30,6)")).as("s"))
+            AggFns.dsumRaw(col("n") * log(col("n").cast("double")))
+              .as("s"))
           .select(col("doc_id"),
             round(log(col("tot").cast("double")) -
               col("s").cast("double") / col("tot"), 4).as("entropy"))
@@ -1294,7 +1294,7 @@ object TextAnalysis {
               .otherwise(lit(0.0))) / lit(2.0))
           .groupBy("source")
           .agg(max("tsrc").as("n_tokens"),
-            sum(col("term").cast("decimal(30,6)")).as("sj"))
+            AggFns.dsumRaw(col("term")).as("sj"))
           .select(col("source"), col("n_tokens"),
             round(col("sj").cast("double"), 4).as("jsd"))
           .orderBy("source")

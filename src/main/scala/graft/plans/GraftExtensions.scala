@@ -39,6 +39,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     register(ext, "graft_dot", classOf[DotProductExpr], 2,
       "graft_dot(array<float|double>, array<float|double>)")(
       c => DotProductExpr(c(0), c(1)))
+    register(ext, "graft_dsum", classOf[DsumAgg], 1,
+      "graft_dsum(numeric)")(
+      c => DsumAgg(c(0)).toAggregateExpression())
     register(ext, "graft_minhash_sig", classOf[MinHashSigExpr], 2,
       "graft_minhash_sig(array<bigint> shingleHashes, int k)")(
       c => MinHashSigExpr(c(0), intLit(c(1), "graft_minhash_sig")))

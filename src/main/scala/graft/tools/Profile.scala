@@ -6,7 +6,8 @@ import graft.{Bench, GraftSession, SparkEntry}
   * pass under Bench's protocol (build + noop-sink save, HotCache released
   * after the pass). Per pass it prints the wall time, the jobs started
   * (plan-build probes, checkpoint fills and the final save), the task
-  * totals, and the stages that used the most executor cpu. The cold pass
+  * totals, and the stages that used the most executor cpu, each named by
+  * its SQL execution id and operators (`graft.Meter.Stage`). The cold pass
   * carries the key's one-time JIT/codegen cost; the warm pass is the
   * steady state.
   *
@@ -17,7 +18,7 @@ import graft.{Bench, GraftSession, SparkEntry}
 object Profile {
   private val TopStages = 8
 
-  private def mb(b: Long): String = f"${b / 1e6}%.1f"
+  private def mb(b: Long): String = f"${b / 1e6}%.3f"
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Profile <dir> <key...>")
@@ -40,7 +41,7 @@ object Profile {
         println(f"  stage ${s.id}%5d tasks ${s.tasks}%5d " +
           f"cpu ${s.cpuNs / 1e9}%8.2f s run ${s.runMs / 1e3}%8.2f s " +
           s"shuffle r/w ${mb(s.shuffleReadB)}/${mb(s.shuffleWriteB)} MB " +
-          s"input ${mb(s.inputB)} MB  ${s.name.take(80)}")
+          s"input ${mb(s.inputB)} MB  ${s.name.take(120)}")
       }
     }
     spark.stop()

@@ -76,14 +76,43 @@ class MeterSpec extends SparkSpecBase {
     assert(c.inputB == c.stages.map(_.inputB).sum)
     assert(c.shuffleWriteB > 0, c)
     // Spark's record of the same jobs: every stage that ran a task is in
-    // the cost, under its name and with the task count Spark counted
+    // the cost, named (see the next test) and with the task count Spark
+    // counted
     val tracker = spark.sparkContext.statusTracker
     val ran = jobIds.flatMap(j => tracker.getJobInfo(j).toSeq)
       .flatMap(_.stageIds.toSeq).distinct
       .flatMap(s => tracker.getStageInfo(s).toSeq)
       .filter(_.numCompletedTasks > 0)
-      .map(s => s.stageId -> (s.name, s.numCompletedTasks)).toMap
-    assert(c.stages.filter(_.tasks > 0).map(s => s.id -> (s.name, s.tasks))
+      .map(s => s.stageId -> s.numCompletedTasks).toMap
+    assert(c.stages.filter(_.tasks > 0).map(s => s.id -> s.tasks)
       .toMap == ran, (c, ran))
+    assert(c.stages.forall(_.name.nonEmpty), c)
+  }
+
+  test("stages are named by their query's execution id and their operators") {
+    // AQE submits shuffle stages from its own thread pool, whose call site
+    // (CompletableFuture) is Spark's stage name; the operators are not
+    val execIds = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val seen = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            execIds.add(x.executionId)
+          case _ =>
+        }
+    }
+    spark.sparkContext.addSparkListener(seen)
+    val c = try Meter.measure(spark) {
+      spark.range(0, 200000, 1, 4)
+        .groupBy((col("id") % 100).as("k")).agg(sum("id").as("s"))
+        .write.format("noop").mode("overwrite").save()
+    }._2 finally spark.sparkContext.removeSparkListener(seen)
+    val ids = execIds.toArray.toSeq
+    val names = c.stages.map(_.name)
+    assert(names.nonEmpty && names.forall(n => ids.exists(x => n.startsWith(s"sql $x: "))),
+      (names, ids))
+    assert(names.exists(n => n.contains("WholeStageCodegen (") &&
+      n.endsWith("> Exchange")), names)
+    assert(!names.exists(_.contains("CompletableFuture")), names)
   }
 }

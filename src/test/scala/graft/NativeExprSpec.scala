@@ -128,6 +128,21 @@ class NativeExprSpec extends SparkSpecBase {
     viaDf.zip(viaSql).foreach { case (a, b) => assert(a == b) }
   }
 
+  test("graft_dsum in SQL equals sum(CAST(x AS DECIMAL(30,6)))") {
+    Seq[(Int, java.lang.Double)]((0, 2.675), (0, 1.0000005), (0, null),
+      (1, -0.0000005), (1, 9.2e12), (1, 9.2e12), (2, null), (3, Double.NaN),
+      (3, 123.4567895))
+      .toDF("g", "x").repartition(3).createOrReplaceTempView("dsum_ne")
+    def q(agg: String) = spark.sql(
+      s"SELECT g, $agg AS s FROM dsum_ne GROUP BY g ORDER BY g")
+    val got = q("graft_dsum(x)")
+    val want = q("sum(CAST(x AS DECIMAL(30,6)))")
+    assert(got.schema == want.schema, got.schema)
+    assert(got.collect().toSeq == want.collect().toSeq)
+    assert(spark.sql("SELECT graft_dsum(x) FROM dsum_ne WHERE g > 9")
+      .collect().head.isNullAt(0))
+  }
+
   test("non-literal size argument to a registered function fails loudly") {
     val e = intercept[Exception] {
       spark.sql("""SELECT graft_ngram_hash(array('a','b'),

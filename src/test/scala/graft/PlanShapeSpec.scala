@@ -61,6 +61,48 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(countOf(p, "HashAggregate") >= 2, p)
   }
 
+  test("q01/q60/s02 money sums run graft_dsum in codegen'd hash aggregates") {
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
+      ObjectHashAggregateExec, SortAggregateExec}
+    val helper = new AdaptiveSparkPlanHelper {}
+    for (k <- Seq("q01_pricing_summary", "q60_tpcds_q2_yoy_weekly",
+                  "s02_skewed_groupby")) {
+      // every query the key executes: q60's pivot runs in its checkpoint fill
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          plans.add(qe.executedPlan)
+        override def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        run(k).write.format("noop").mode("overwrite").save()
+        org.apache.spark.GraftCoreShim.drainListenerBus(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      graft.operators.HotCache.releaseAll()
+      val all = plans.toArray(Array.empty[SparkPlan]).toSeq
+      val shown = all.mkString("\n")
+      val dsumAggs = all.flatMap(p => helper.collectWithSubqueries(p) {
+        case h: HashAggregateExec if h.aggregateExpressions.exists(
+          _.aggregateFunction.isInstanceOf[graft.plans.DsumAgg]) => h
+      })
+      val codegend = all.flatMap(p => helper.collectWithSubqueries(p) {
+        case w: WholeStageCodegenExec => w
+      }).flatMap(_.child.collect { case h: HashAggregateExec => h })
+      assert(dsumAggs.nonEmpty, s"$k: $shown")
+      assert(dsumAggs.forall(a => codegend.exists(_ eq a)), s"$k: $shown")
+      assert(all.forall(p => helper.collectWithSubqueries(p) {
+        case a: SortAggregateExec => a
+        case a: ObjectHashAggregateExec => a
+      }.isEmpty), s"$k: $shown")
+      assert(!shown.contains("sum(cast("), s"$k: $shown")
+    }
+  }
+
   test("d09 shingles only candidate docs: the semi-join prune is in the plan") {
     val p = plan("d09_crossmodal_dedup")
     assert(p.contains("LeftSemi"), p) // documents pruned to candidate ids
