@@ -66,17 +66,6 @@ class DsumSpec extends SparkSpecBase {
   private val legacy: Column => Column = c => sum(c.cast(DecimalType(30, 6)))
   private val kernel: Column => Column = c => AggFns.dsumRaw(c)
 
-  private def withConfs[A](kv: (String, String)*)(body: => A): A = {
-    val conf = spark.conf
-    val old = kv.map { case (k, _) => k -> conf.getOption(k) }
-    kv.foreach { case (k, v) => conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
-
   /** Every execution shape the kernel has: whole-stage codegen, codegen'd
     * projections without it, interpreted; 1 and 8 shuffle partitions.
     */

@@ -19,4 +19,14 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 
   def run(name: String, dir: String = sf) =
     SparkEntry.queries(name)(spark, dir)
+
+  /** Runs `body` with the session confs set, then restores them. */
+  def withConfs[A](kv: (String, String)*)(body: => A): A = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, old) =>
+      old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
 }

@@ -45,13 +45,6 @@ class TablesSpec extends SparkSpecBase {
   private def jobsDuring(body: => Unit): Int =
     Meter.measure(spark)(body)._2.jobs
 
-  private def withConf[A](k: String, v: String)(body: => A): A = {
-    val saved = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body
-    finally saved.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-  }
-
   private def tmpDir(tag: String) =
     Files.createTempDirectory(s"graft-tables-$tag").toString
 
@@ -92,7 +85,7 @@ class TablesSpec extends SparkSpecBase {
     // inferTimestampNTZ, LTZ without it
     Tables(spark, sf, "orders")
     val ntz = Tables(spark, sf, "orders").schema("o_orderdate").dataType
-    withConf("spark.sql.parquet.inferTimestampNTZ.enabled",
+    withConfs("spark.sql.parquet.inferTimestampNTZ.enabled" ->
       (ntz != TimestampNTZType).toString) {
       val flipped = Tables(spark, sf, "orders")
       assert(flipped.schema == plain(sf, "orders").schema)
@@ -105,7 +98,7 @@ class TablesSpec extends SparkSpecBase {
     val dir = tmpDir("nanos")
     writeNanosEvents(s"$dir/events.parquet",
       Seq(1L -> 1700000000123456789L, 2L -> 1700000001999999999L))
-    withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
+    withConfs("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
       Tables(spark, dir, "events")
       val ev = Tables(spark, dir, "events")
       assert(spark.read.parquet(s"$dir/events.parquet")
@@ -115,7 +108,7 @@ class TablesSpec extends SparkSpecBase {
         .sorted.toSeq == Seq(1700000000123456L, 1700000001999999L))
       assert(outcome(ev) == outcome(plain(dir, "events")))
     }
-    withConf("spark.sql.legacy.parquet.nanosAsLong", "false") {
+    withConfs("spark.sql.legacy.parquet.nanosAsLong" -> "false") {
       assert(outcome(Tables(spark, dir, "events")) ==
         outcome(plain(dir, "events")))
     }
