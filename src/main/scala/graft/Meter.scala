@@ -1,6 +1,9 @@
 package graft
 
+import java.lang.management.ManagementFactory
+
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftCoreShim
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
@@ -27,10 +30,13 @@ object Meter {
                          runMs: Long, shuffleReadB: Long,
                          shuffleWriteB: Long, inputB: Long)
 
-  /** The cost of a block: its wall time alone, the jobs it started, and
-    * every task that ended inside it, by stage in submission order.
+  /** The cost of a block: its wall time alone, the jobs it started, the
+    * JVM's garbage-collection time while it ran (every collector's
+    * MXBean; in local mode driver and executors share the JVM), and every
+    * task that ended inside it, by stage in submission order.
     */
-  final case class Cost(wallSec: Double, jobs: Int, stages: Seq[Stage]) {
+  final case class Cost(wallSec: Double, jobs: Int, gcMs: Long,
+                        stages: Seq[Stage]) {
     def tasks: Int = stages.map(_.tasks).sum
     def cpuMs: Long = stages.map(_.cpuNs).sum / 1000000
     def runMs: Long = stages.map(_.runMs).sum
@@ -44,6 +50,11 @@ object Meter {
     val ops = if (scopes.isEmpty) info.name else scopes.mkString(" > ")
     execId.fold(ops)(x => s"sql $x: $ops")
   }
+
+  /** Accumulated collection time of every garbage collector of the JVM. */
+  private def gcMs(): Long =
+    ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(_.getCollectionTime.max(0L)).sum
 
   /** Runs `body` and returns its result with its cost. The listener bus is
     * drained before and after: task-end events post asynchronously, so
@@ -87,11 +98,13 @@ object Meter {
     GraftCoreShim.drainListenerBus(sc)
     sc.addSparkListener(listener)
     try {
+      val gc0 = gcMs()
       val t0 = System.nanoTime()
       val a = body
       val wall = (System.nanoTime() - t0) / 1e9
+      val gc = gcMs() - gc0
       GraftCoreShim.drainListenerBus(sc)
-      stages.synchronized((a, Cost(wall, jobs, stages.values.toSeq)))
+      stages.synchronized((a, Cost(wall, jobs, gc, stages.values.toSeq)))
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions.broadcast
   * digests — is broadcast so the big side never shuffles. That bound
   * holds at bench scale but not necessarily at 100 TB, so each hint is
   * decided at plan-build time by an early-terminating
-  * `limit(cap + 1).count()` over a probe frame the caller picks. Past the
+  * `limit(cap + 1).count()` over a probe frame the caller picks, or on a
+  * row count the caller already has (g06 observes it off a fill). Past the
   * cap the hint is dropped and the planner/AQE picks a shuffled join —
   * slower, but it completes instead of OOM-ing the driver — and the
   * fallback prints one `[graft]` line on stderr, never silently. The
@@ -34,7 +35,9 @@ object BroadcastGuard {
   def hint(key: String, what: String, probe: DataFrame): DataFrame => DataFrame =
     hint(key, what, rows(probe))
 
-  /** [[hint]] over a row count already taken with [[rows]]. */
+  /** [[hint]] over a row count already taken with [[rows]] or observed
+    * off a checkpoint fill (`Checkpoints.cutObserved`).
+    */
   def hint(key: String, what: String, rows: Long): DataFrame => DataFrame = {
     val cap = PlanPin.get.broadcastCap
     if (rows <= cap) broadcast(_)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Lineage truncation for the iterative operators (guide §5).
@@ -32,24 +32,33 @@ object Checkpoints {
     }
   }
 
-  /** cut + the row count OBSERVED off the same materializing job
-    * (`Dataset.observe`): the iterative convergence probes previously
-    * paid one extra count() job per round on top of the checkpoint
-    * fill — a full pass over the cached partitions plus a scheduler
-    * round-trip, per round, per operator. The checkpoint is an eager
-    * action, so the observation is complete by the time this returns.
+  /** cut + aggregates OBSERVED off the same materializing job
+    * (`Dataset.observe`), returned by their aliases: the iterative
+    * convergence probes previously paid one extra job per round on top of
+    * the checkpoint fill — a full pass over the cached partitions plus a
+    * scheduler round-trip, per round, per operator. The checkpoint is an
+    * eager action, so the observation is complete by the time this
+    * returns. Every aggregate needs an alias.
     */
-  def cutCounted(df: DataFrame): (DataFrame, Long) = {
+  def cutObserved(df: DataFrame, aggs: Column*): (DataFrame, Map[String, Any]) = {
     val obs = Observation()
-    val out = cut(df.observe(obs, count(lit(1)).as("n")))
-    (out, obs.get("n").asInstanceOf[Long])
+    val out = cut(df.observe(obs, aggs.head, aggs.tail: _*))
+    (out, obs.get)
   }
 
-  /** `.cut()` / `.cutCounted()` postfix syntax so call sites keep the
-    * chained `.localCheckpoint()` shape they had.
+  /** cut + the row count observed off the fill ([[cutObserved]]). */
+  def cutCounted(df: DataFrame): (DataFrame, Long) =
+    cutObserved(df, count(lit(1)).as("n")) match {
+      case (out, m) => (out, m("n").asInstanceOf[Long])
+    }
+
+  /** `.cut()` / `.cutCounted()` / `.cutObserved()` postfix syntax so call
+    * sites keep the chained `.localCheckpoint()` shape they had.
     */
   implicit class CutSyntax(private val df: DataFrame) extends AnyVal {
     def cut(): DataFrame = Checkpoints.cut(df)
     def cutCounted(): (DataFrame, Long) = Checkpoints.cutCounted(df)
+    def cutObserved(aggs: Column*): (DataFrame, Map[String, Any]) =
+      Checkpoints.cutObserved(df, aggs: _*)
   }
 }

@@ -434,38 +434,51 @@ object GraphOps {
     // hubs from the long tail before sampling or embedding a graph.
     // The round count is FIXED (like g01's iterations) so the result is
     // a pure function of the input; the trace row per round shows
-    // convergence (equal consecutive rows = fixed point reached).
-    // Physically each round is one hash aggregate (degrees) + two
-    // semi-joins of the edge list — linear per round, lineage truncated
-    // per round with localCheckpoint. The oracle unrolls the identical
-    // 4 rounds as CTEs. Output: 5 constant rows (round 0 = raw graph).
+    // convergence (equal consecutive rows = fixed point reached). The
+    // oracle unrolls the identical 4 edge-peeling rounds as CTEs.
+    // Output: 5 rows (round 0 = raw graph).
+    //
+    // The peel state is the node-sized degree table, not the edge list.
+    // Write e_r for round r's edges and keep_r for the nodes of degree
+    // ≥ 3 in e_{r-1}. Every node of e_{r-1} is in keep_{r-1}, so
+    // keep_r ⊆ keep_{r-1}, and therefore
+    //   e_r = e_{r-1} ⋉ keep_r ⋉ keep_r = e_0 ⋉ keep_r (on u) ⋉ keep_r (on v).
+    // Physically: e_0 is checkpointed ONCE; each round filters that one
+    // e_0 through two semi-joins against keep_r (both read one broadcast
+    // — `ka`/`kb` are aliases of one plan, so the exchange is reused),
+    // aggregates deg_r = groupBy(u).count and cuts only that |nodes|-row
+    // table. The trace is observed off each degree fill: |deg_r| is
+    // round r's n_nodes and Σdeg_r / 2 its n_edges (both directions of
+    // every edge are in e_r), so the result is a local frame and the
+    // edge list is never re-checkpointed or re-aggregated for a trace.
+    // keep is |nodes|-bounded, so it is broadcast while |deg_0| fits an
+    // executor (BroadcastGuard, like g01's rank hint); past the cap each
+    // round degrades loudly to shuffled semi-joins, the only shape at
+    // 1e9 nodes.
     "g06_kcore" -> QueryDef(
       build = (s, d) => {
-        def trace(e: DataFrame, r: Int): DataFrame =
-          e.agg(lit(r.toLong).as("round"),
-            countDistinct("u").as("n_nodes"),
-            (count(lit(1)) / 2).cast("long").as("n_edges"))
-        var e = purchaseEdges(s, d).cut()
-        // r11: the surviving-node set is |nodes|-bounded, so both
-        // per-round semi-joins BROADCAST it while it fits an executor
-        // (BroadcastGuard, like g01's rank hint — past the cap each
-        // round degrades to the shuffled semi-join, the only shape at
-        // 1e9 nodes). keep is checkpointed once per round: the two
-        // semi-join legs otherwise re-ran the degree aggregate twice
-        // (rename ≠ same canonical plan, so no exchange reuse).
-        val hint = BroadcastGuard.hint("g06", "node set",
-          e.select("u").distinct())
-        var out = trace(e, 0)
-        for (r <- 1 to 4) {
-          val keep = e.groupBy("u").agg(count(lit(1)).as("deg"))
-            .filter(col("deg") >= 3).select("u").cut()
-          e = e.join(hint(keep), Seq("u"), "left_semi")
-            .join(hint(keep.withColumnRenamed("u", "v")), Seq("v"),
-              "left_semi")
-            .select("u", "v").cut()
-          out = out.unionAll(trace(e, r))
+        val e0 = purchaseEdges(s, d).cut().as("e")
+        // deg of the edges e, cut, with (|deg|, Σdeg / 2) observed off
+        // the fill (coalesce: Σ over zero nodes is NULL)
+        def degrees(e: DataFrame): (DataFrame, Long, Long) = {
+          val (deg, obs) = e.groupBy("u").agg(count(lit(1)).as("deg"))
+            .cutObserved(count(lit(1)).as("nodes"),
+              coalesce(sum("deg"), lit(0L)).as("degs"))
+          (deg, obs("nodes").asInstanceOf[Long],
+            obs("degs").asInstanceOf[Long] / 2)
         }
-        out.orderBy("round")
+        val deg0 = degrees(e0)
+        val hint = BroadcastGuard.hint("g06", "node set", deg0._2)
+        val trace = (1 to 4).scanLeft(deg0) { case ((deg, _, _), _) =>
+          val keep = hint(deg.filter(col("deg") >= 3).select("u"))
+          degrees(e0
+            .join(keep.as("ka"), col("e.u") === col("ka.u"), "left_semi")
+            .join(keep.as("kb"), col("e.v") === col("kb.u"), "left_semi"))
+        }
+        import s.implicits._
+        trace.zipWithIndex
+          .map { case ((_, nodes, edges), r) => (r.toLong, nodes, edges) }
+          .toDF("round", "n_nodes", "n_edges")
       },
       oracle = Some {
         val rounds = (1 to 4).map { r =>

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 /** Pins the `graft.checkpoint.dir` gate (Checkpoints.cut): the reliable-
   * checkpoint cluster profile must produce results identical to the
   * default localCheckpoint path, on an ITERATIVE operator that exercises
-  * cut() and cutCounted() every round (connected components), and the
-  * observed convergence count must match a plain count().
+  * cut() and cutCounted() every round (connected components), and on
+  * g06, whose trace is observed off its degree fills (cutObserved); the
+  * observed aggregates must match plain aggregates in both modes.
   */
 class CheckpointModeSpec extends SparkSpecBase {
 
@@ -46,5 +47,31 @@ class CheckpointModeSpec extends SparkSpecBase {
     val (out, n) = operators.Checkpoints.cutCounted(df)
     assert(n === 334L)
     assert(out.count() === 334L)
+  }
+
+  test("cutObserved's observed aggregates equal plain aggregates in both modes") {
+    val df = spark.range(0, 1000).select(col("id").as("v"))
+      .filter(col("v") % 3 === 0)
+    // the empty frame is the NULL-sum case: no row reaches sum or max
+    def check(): Unit = Seq(df, df.filter(col("v") < 0)).foreach { in =>
+      val (out, m) = operators.Checkpoints.cutObserved(in,
+        count(lit(1)).as("n"), sum("v").as("s"), max("v").as("hi"))
+      val plain = in.agg(count(lit(1)), sum("v"), max("v")).head()
+      assert(m == Map("n" -> plain.get(0), "s" -> plain.get(1),
+        "hi" -> plain.get(2)))
+      assert(out.agg(count(lit(1)), sum("v"), max("v")).head() == plain)
+    }
+    check()
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    withConfs("graft.checkpoint.dir" -> dir)(check())
+  }
+
+  test("reliable-checkpoint mode produces identical g06 rows") {
+    val local = run("g06_kcore").collect().toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val reliable =
+      withConfs("graft.checkpoint.dir" -> dir)(run("g06_kcore").collect().toSeq)
+    assert(reliable == local)
+    assert(local.length == 5)
   }
 }

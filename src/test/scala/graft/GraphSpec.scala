@@ -177,6 +177,86 @@ class GraphSpec extends SparkSpecBase {
     (1L to 4L).foreach(r => assert(got(r) == ((6L, 9L)), s"round $r: $got"))
   }
 
+  /** Writes (custkey, suppkey) purchase pairs as orders + lineitem. */
+  private def purchases(pairs: Seq[(Long, Long)]): String = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-kcore").toString
+    pairs.zipWithIndex.map { case ((c, _), i) => (i.toLong, c) }
+      .toDF("o_orderkey", "o_custkey").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    pairs.zipWithIndex.map { case ((_, su), i) => (i.toLong, su) }
+      .toDF("l_orderkey", "l_suppkey").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    dir
+  }
+
+  private def kcoreRows(dir: String): Seq[(Long, Long, Long)] =
+    run("g06_kcore", dir).collect().map(r => (r.getAs[Long]("round"),
+      r.getAs[Long]("n_nodes"), r.getAs[Long]("n_edges"))).toSeq
+
+  /** The edge-peeling loop g06 ran before its peel state became the
+    * degree table: each round semi-joins the PREVIOUS round's edges
+    * against its degree-≥3 nodes, and each trace row is counted off the
+    * edges themselves.
+    */
+  private def edgePeelRows(dir: String): Seq[(Long, Long, Long)] = {
+    val o = spark.read.parquet(s"$dir/orders.parquet")
+    val l = spark.read.parquet(s"$dir/lineitem.parquet")
+    val e0 = o.join(l, col("o_orderkey") === col("l_orderkey"))
+      .select((col("o_custkey") * 2).as("cu"), (col("l_suppkey") * 2 + 1).as("sv"))
+      .distinct()
+    val edges = e0.select(col("cu").as("u"), col("sv").as("v"))
+      .unionAll(e0.select(col("sv").as("u"), col("cu").as("v")))
+    (1 to 4).scanLeft(edges) { (e, _) =>
+      val keep = e.groupBy("u").agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= 3).select("u")
+      e.join(keep, Seq("u"), "left_semi")
+        .join(keep.withColumnRenamed("u", "v"), Seq("v"), "left_semi")
+        .select("u", "v").localCheckpoint()
+    }.zipWithIndex.map { case (e, r) =>
+      val t = e.agg(countDistinct("u"), count(lit(1))).head()
+      (r.toLong, t.getLong(0), t.getLong(1) / 2)
+    }
+  }
+
+  test("g06 peel cascade: nodes drop in rounds 1, 2 and 3, as edge peeling does") {
+    // K33 core (customers 1-3 × suppliers 10-12) plus a chain hanging
+    // off it: pendant customer 4 → supplier 13 (also on customers 1, 5)
+    // → customer 5 (also on suppliers 10, 11). Round 1 peels customer 4
+    // (degree 1), which leaves supplier 13 at degree 2 for round 2,
+    // which leaves customer 5 at degree 2 for round 3; the K33 remains.
+    // A node of degree ≥ 3 only in the raw graph (13, 5) must not come
+    // back: keep_r ⊆ keep_{r-1} is what lets every round filter e_0.
+    val dir = purchases(
+      (for (c <- 1L to 3L; su <- 10L to 12L) yield (c, su)) ++
+        Seq((4L, 13L), (5L, 13L), (1L, 13L), (5L, 10L), (5L, 11L)))
+    val want = Seq((0L, 9L, 14L), (1L, 8L, 13L), (2L, 7L, 11L),
+      (3L, 6L, 9L), (4L, 6L, 9L))
+    assert(kcoreRows(dir) == want)
+    assert(edgePeelRows(dir) == want)
+  }
+
+  test("g06 on a graph without a 3-core peels to (0, 0) and stays there") {
+    // customers 1, 2 on suppliers 10-12, customer 3 on 10 and 11 only:
+    // round 1 peels customer 3 and supplier 12 (degree 2), leaving a
+    // 4-cycle whose nodes all have degree 2 — round 2 peels everything
+    val dir = purchases(Seq((1L, 10L), (1L, 11L), (1L, 12L),
+      (2L, 10L), (2L, 11L), (2L, 12L), (3L, 10L), (3L, 11L)))
+    val want = Seq((0L, 6L, 8L), (1L, 4L, 4L), (2L, 0L, 0L),
+      (3L, 0L, 0L), (4L, 0L, 0L))
+    assert(kcoreRows(dir) == want)
+    assert(edgePeelRows(dir) == want)
+  }
+
+  test("g06 on zero-row orders and lineitem gives five (r, 0, 0) rows") {
+    // every degree table is empty, so Σdeg is NULL on each fill
+    assert(kcoreRows(purchases(Nil)) == (0L to 4L).map(r => (r, 0L, 0L)))
+  }
+
+  test("g06 on sf0.001 equals the edge-peeling loop round for round") {
+    assert(kcoreRows(sf) == edgePeelRows(sf))
+  }
+
   test("g07 butterflies: biclique counts, C(shared,2) law, hub cap excludes") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-bfly").toString

@@ -617,6 +617,54 @@ class PlanShapeSpec extends SparkSpecBase {
     graft.operators.HotCache.releaseAll()
   }
 
+  test("g06 peels on node-sized state: one edge-sized fill, one broadcast a round") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ReusedExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    // every query g06's build runs is a checkpoint fill
+    val fills = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        fills.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.GraftCoreShim.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val out =
+      try {
+        val df = run("g06_kcore")
+        org.apache.spark.GraftCoreShim.drainListenerBus(spark.sparkContext)
+        df
+      } finally spark.listenerManager.unregister(listener)
+    val all = fills.asScala.toSeq
+    val cols = all.map(_.analyzed.output.map(_.name))
+    // the edge list is cut once; every round cuts only its degree table
+    assert(cols.count(_ == Seq("u", "v")) == 1, cols)
+    assert(cols.count(_ == Seq("u", "deg")) == 5, cols)
+    assert(all.length == 6, cols)
+    def semis(p: SparkPlan) = helper.collect(p) {
+      case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
+    }
+    val rounds = all.map(_.executedPlan).filter(semis(_).nonEmpty)
+    assert(rounds.length == 4, rounds.mkString("\n"))
+    // both semi-joins of a round read one broadcast: the second reuses it
+    rounds.foreach { p =>
+      assert(semis(p).length == 2, p)
+      assert(helper.collect(p) { case b: BroadcastExchangeExec => b }.length == 1, p)
+      assert(helper.collect(p) {
+        case r: ReusedExchangeExec if r.child.isInstanceOf[BroadcastExchangeExec] => r
+      }.length == 1, p)
+    }
+    // the trace is observed off the fills: the result is a local frame
+    val fin = out.queryExecution.executedPlan.toString
+    assert(!fin.contains("Exchange"), fin)
+  }
+
   test("q09/q17 part join flips to a shuffled join past the broadcast threshold") {
     // SURVEY §5's prediction, pinned: `part` is SF-proportional (unlike
     // region/nation), so neither q09 nor q17 may HINT it broadcast — past
