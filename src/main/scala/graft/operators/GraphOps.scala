@@ -185,7 +185,8 @@ object GraphOps {
     * always-correct unpacked aggregation — when:
     *  - the dimension table is ABSENT from the data dir (fact-only
     *    inputs, e.g. planted test fixtures: r11's unguarded read crashed
-    *    five GraphSpec tests with PATH_NOT_FOUND);
+    *    five GraphSpec tests with PATH_NOT_FOUND) — told from its file
+    *    listing, without running a read;
     *  - any id is NEGATIVE (a negative long sign-extends when OR'd into
     *    s1<<32|s2 and would silently collide pairs — r11 ADVICE);
     *  - the probe itself fails for any other reason (never let an
@@ -196,9 +197,17 @@ object GraphOps {
   private val idBounds = new Tables.FileMemo[(String, String, String), Long]
 
   private[graft] def maxIdOf(s: SparkSession, d: String, table: String,
-                             idCol: String): Long =
-    idBounds.getOrElseUpdate((d, table, idCol),
-      Tables.fingerprint(s, d, table)) {
+                             idCol: String): Long = {
+    def unpacked(why: String): Long = {
+      System.err.println(s"[graft] pairCounts: cannot probe $table.$idCol (" +
+        why + ") — using the unpacked pair aggregation")
+      Long.MaxValue
+    }
+    // an absent table is known from its listing: no failing read, so no
+    // failed query for the session's listeners to re-analyse and log
+    val stamp = Tables.fingerprint(s, d, table)
+    if (stamp.isEmpty) unpacked(s"no files at $d/$table.parquet")
+    else idBounds.getOrElseUpdate((d, table, idCol), stamp) {
       try {
         val row = t(s, d, table)
           .agg(min(col(idCol).cast("long")), max(col(idCol).cast("long")))
@@ -211,14 +220,10 @@ object GraphOps {
           Long.MaxValue
         } else row.getLong(1)
       } catch {
-        case e: Exception =>
-          System.err.println(
-            s"[graft] pairCounts: cannot probe $table.$idCol (" +
-              e.getMessage.linesIterator.next() +
-              ") — using the unpacked pair aggregation")
-          Long.MaxValue
+        case e: Exception => unpacked(e.getMessage.linesIterator.next())
       }
     }
+  }
 
   private val R0 = 1000000000000L // rank unit: 1.0 == 10^12
   private val Iters = 6
@@ -451,6 +456,16 @@ object GraphOps {
     // round r's n_nodes and Σdeg_r / 2 its n_edges (both directions of
     // every edge are in e_r), so the result is a local frame and the
     // edge list is never re-checkpointed or re-aggregated for a trace.
+    //
+    // The peel stops at its fixed point, exactly. If no node of deg_r has
+    // degree < 3 (count_if, observed off the same fill), then
+    // keep_{r+1} = nodes(e_r) ⊆ keep_r, and every edge of e_0 with both
+    // ends in nodes(e_r) is already in e_r, so e_{r+1} = e_r and every
+    // later trace row repeats row r. From there each round returns the
+    // previous round's state: no keep, no semi-join, no degree fill. The
+    // TPC purchase graphs are fixed at round 0 (sf0.001, sf0.01) or
+    // round 1 (sf0.1), so they cut e_0 and one or two degree tables
+    // instead of e_0 and five; the empty graph is fixed at round 0.
     // keep is |nodes|-bounded, so it is broadcast while |deg_0| fits an
     // executor (BroadcastGuard, like g01's rank hint); past the cap each
     // round degrades loudly to shuffled semi-joins, the only shape at
@@ -458,26 +473,33 @@ object GraphOps {
     "g06_kcore" -> QueryDef(
       build = (s, d) => {
         val e0 = purchaseEdges(s, d).cut().as("e")
-        // deg of the edges e, cut, with (|deg|, Σdeg / 2) observed off
-        // the fill (coalesce: Σ over zero nodes is NULL)
-        def degrees(e: DataFrame): (DataFrame, Long, Long) = {
+        // deg of the edges e, cut, with (|deg|, Σdeg / 2, fixed) observed
+        // off the fill (coalesce: Σ over zero nodes is NULL; fixed = no
+        // node of degree < 3, true of zero nodes too)
+        def degrees(e: DataFrame): (DataFrame, Long, Long, Boolean) = {
           val (deg, obs) = e.groupBy("u").agg(count(lit(1)).as("deg"))
             .cutObserved(count(lit(1)).as("nodes"),
-              coalesce(sum("deg"), lit(0L)).as("degs"))
+              coalesce(sum("deg"), lit(0L)).as("degs"),
+              count_if(col("deg") < 3).as("peel"))
           (deg, obs("nodes").asInstanceOf[Long],
-            obs("degs").asInstanceOf[Long] / 2)
+            obs("degs").asInstanceOf[Long] / 2,
+            obs("peel").asInstanceOf[Long] == 0L)
         }
         val deg0 = degrees(e0)
-        val hint = BroadcastGuard.hint("g06", "node set", deg0._2)
-        val trace = (1 to 4).scanLeft(deg0) { case ((deg, _, _), _) =>
-          val keep = hint(deg.filter(col("deg") >= 3).select("u"))
-          degrees(e0
-            .join(keep.as("ka"), col("e.u") === col("ka.u"), "left_semi")
-            .join(keep.as("kb"), col("e.v") === col("kb.u"), "left_semi"))
+        // lazy: a graph fixed at round 0 builds no keep, so it neither
+        // broadcasts nor reports a fallback
+        lazy val hint = BroadcastGuard.hint("g06", "node set", deg0._2)
+        val trace = (1 to 4).scanLeft(deg0) {
+          case (fixed @ (_, _, _, true), _) => fixed
+          case ((deg, _, _, _), _) =>
+            val keep = hint(deg.filter(col("deg") >= 3).select("u"))
+            degrees(e0
+              .join(keep.as("ka"), col("e.u") === col("ka.u"), "left_semi")
+              .join(keep.as("kb"), col("e.v") === col("kb.u"), "left_semi"))
         }
         import s.implicits._
         trace.zipWithIndex
-          .map { case ((_, nodes, edges), r) => (r.toLong, nodes, edges) }
+          .map { case ((_, nodes, edges, _), r) => (r.toLong, nodes, edges) }
           .toDF("round", "n_nodes", "n_edges")
       },
       oracle = Some {

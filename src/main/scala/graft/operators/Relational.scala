@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.AggFns.{dsum, dsumRaw, sqlDsum}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.plans.TopKPerGroup
-import org.apache.spark.sql.{Column, DataFrame, GraftShim}
+import org.apache.spark.sql.{DataFrame, GraftShim}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, NullsFirst, NullsLast, SortOrder}
 
 /** Public API for the custom per-group top-k operator (graft.plans.

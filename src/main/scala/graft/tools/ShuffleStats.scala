@@ -21,7 +21,6 @@ object ShuffleStats {
     val size = if (args.length > 1) args(1).toDouble else 0.02
     val n = (10000000L * size).toLong
     val spark = GraftSession.local(GraftSession.cpus, "shuffle-stats")
-    import spark.implicits._
 
     def measure(label: String)(work: => Unit): Unit = {
       val c = Meter.measure(spark)(work)._2

@@ -204,7 +204,6 @@ class DedupSpec extends SparkSpecBase {
   }
 
   test("oracle plane guard: corpus past the 4-plane bound turns the gate red") {
-    import spark.implicits._
     val dedup = graft.operators.Dedup
     // shipped SFs are far inside the bound — the guard must pass
     dedup.assertOracleBounds(spark, sf)

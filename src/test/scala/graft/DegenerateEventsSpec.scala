@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.functions._
 
 /** Degenerate-event robustness, the events twin of DegenerateDocsSpec:
   * real event streams carry NULL timestamps (clock failures), NULL

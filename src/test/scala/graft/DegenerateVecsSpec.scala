@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Degenerate-vector robustness, the embeddings twin of
   * DegenerateDocsSpec: a real embedding pipeline ships NULL vectors
   * (failed encode), all-zero vectors (padding), and wrong-dimension

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Empty-input robustness: at production scale, empty filtered subsets

@@ -144,16 +144,19 @@ class GraphSpec extends SparkSpecBase {
 
   test("g05 without a supplier table reports its failed id-bound probe once") {
     // the absent table is never memoized, so each evaluation of the bound
-    // re-runs the failing read and prints its fallback line again
+    // probes the absence again and prints its fallback line again
     val dir = Planted.purchaseGraph(spark)
     val buf = new java.io.ByteArrayOutputStream
     val saved = System.err
     System.setErr(new java.io.PrintStream(buf, true))
-    try run("g05_supplier_overlap", dir)
-    finally System.setErr(saved)
+    val (_, _, failed) =
+      try queriesDuring(run("g05_supplier_overlap", dir))
+      finally System.setErr(saved)
     val lines = buf.toString.linesIterator
       .filter(_.contains("cannot probe supplier.s_suppkey")).toSeq
     assert(lines.length == 1, buf.toString)
+    // and the absence is read off the file listing: no query fails
+    assert(failed.isEmpty, failed)
   }
 
   test("g06 k-core peels the pendant, keeps the K33 core, reaches a fixed point") {
@@ -177,18 +180,8 @@ class GraphSpec extends SparkSpecBase {
     (1L to 4L).foreach(r => assert(got(r) == ((6L, 9L)), s"round $r: $got"))
   }
 
-  /** Writes (custkey, suppkey) purchase pairs as orders + lineitem. */
-  private def purchases(pairs: Seq[(Long, Long)]): String = {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-kcore").toString
-    pairs.zipWithIndex.map { case ((c, _), i) => (i.toLong, c) }
-      .toDF("o_orderkey", "o_custkey").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    pairs.zipWithIndex.map { case ((_, su), i) => (i.toLong, su) }
-      .toDF("l_orderkey", "l_suppkey").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    dir
-  }
+  private def purchases(pairs: Seq[(Long, Long)]): String =
+    Planted.purchases(spark, pairs)
 
   private def kcoreRows(dir: String): Seq[(Long, Long, Long)] =
     run("g06_kcore", dir).collect().map(r => (r.getAs[Long]("round"),
@@ -220,16 +213,10 @@ class GraphSpec extends SparkSpecBase {
   }
 
   test("g06 peel cascade: nodes drop in rounds 1, 2 and 3, as edge peeling does") {
-    // K33 core (customers 1-3 × suppliers 10-12) plus a chain hanging
-    // off it: pendant customer 4 → supplier 13 (also on customers 1, 5)
-    // → customer 5 (also on suppliers 10, 11). Round 1 peels customer 4
-    // (degree 1), which leaves supplier 13 at degree 2 for round 2,
-    // which leaves customer 5 at degree 2 for round 3; the K33 remains.
-    // A node of degree ≥ 3 only in the raw graph (13, 5) must not come
-    // back: keep_r ⊆ keep_{r-1} is what lets every round filter e_0.
-    val dir = purchases(
-      (for (c <- 1L to 3L; su <- 10L to 12L) yield (c, su)) ++
-        Seq((4L, 13L), (5L, 13L), (1L, 13L), (5L, 10L), (5L, 11L)))
+    // Planted.kcoreCascade: a K33 core with a chain that peels one node a
+    // round. A node of degree ≥ 3 only in the raw graph (13, 5) must not
+    // come back: keep_r ⊆ keep_{r-1} is what lets every round filter e_0.
+    val dir = Planted.kcoreCascade(spark)
     val want = Seq((0L, 9L, 14L), (1L, 8L, 13L), (2L, 7L, 11L),
       (3L, 6L, 9L), (4L, 6L, 9L))
     assert(kcoreRows(dir) == want)
@@ -251,6 +238,19 @@ class GraphSpec extends SparkSpecBase {
   test("g06 on zero-row orders and lineitem gives five (r, 0, 0) rows") {
     // every degree table is empty, so Σdeg is NULL on each fill
     assert(kcoreRows(purchases(Nil)) == (0L to 4L).map(r => (r, 0L, 0L)))
+  }
+
+  test("g06 on a graph fixed at round 0 cuts e_0 and one degree table") {
+    // K33 alone: every node has degree 3, so deg_0 peels nothing, and
+    // the exit repeats round 0 without another semi-join or fill
+    val dir = purchases(for (c <- 1L to 3L; su <- 10L to 12L) yield (c, su))
+    val want = (0L to 4L).map(r => (r, 6L, 9L))
+    assert(kcoreRows(dir) == want)
+    assert(edgePeelRows(dir) == want)
+    // every query the build runs is a checkpoint fill
+    val (_, fills, _) = queriesDuring(run("g06_kcore", dir))
+    val cols = fills.map(_.analyzed.output.map(_.name))
+    assert(cols == Seq(Seq("u", "v"), Seq("u", "deg")), cols)
   }
 
   test("g06 on sf0.001 equals the edge-peeling loop round for round") {

@@ -328,7 +328,6 @@ class PipelineOpsSpec extends SparkSpecBase {
 
   test("x19 k-anonymity: a 2-doc QI class is at risk, a 6-doc class is not") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("x19").toString
     // en/s1/len_c=1: 6 docs (safe); en/s2/len_c=0: 2 docs (< 5, at risk)
     val docs = (0L until 6L).map(i => (i, "x", "en", "s1", 105L)) ++

@@ -617,41 +617,46 @@ class PlanShapeSpec extends SparkSpecBase {
     graft.operators.HotCache.releaseAll()
   }
 
-  test("g06 peels on node-sized state: one edge-sized fill, one broadcast a round") {
-    import scala.jdk.CollectionConverters._
+  /** The fills g06's build runs on `dir` (every query it runs is one),
+    * their output columns, and its result.
+    */
+  private def g06Fills(dir: String) = {
+    val (out, fills, _) = queriesDuring(run("g06_kcore", dir))
+    (fills, fills.map(_.analyzed.output.map(_.name)), out)
+  }
+
+  test("g06 at sf0.001 is fixed at round 0: one edge fill, one degree fill, no round") {
     import org.apache.spark.sql.catalyst.plans.LeftSemi
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val (all, cols, _) = g06Fills(sf)
+    assert(cols == Seq(Seq("u", "v"), Seq("u", "deg")), cols)
+    // no semi-join is planned at all, broadcast or shuffled
+    all.foreach { qe =>
+      assert(qe.optimizedPlan.collect {
+        case j: Join if j.joinType == LeftSemi => j
+      }.isEmpty, qe.executedPlan)
+    }
+  }
+
+  test("g06 peels on node-sized state: one edge-sized fill, one broadcast a round") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
       ReusedExchangeExec}
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val helper = new AdaptiveSparkPlanHelper {}
-    // every query g06's build runs is a checkpoint fill
-    val fills = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        fills.add(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    org.apache.spark.GraftCoreShim.drainListenerBus(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    val out =
-      try {
-        val df = run("g06_kcore")
-        org.apache.spark.GraftCoreShim.drainListenerBus(spark.sparkContext)
-        df
-      } finally spark.listenerManager.unregister(listener)
-    val all = fills.asScala.toSeq
-    val cols = all.map(_.analyzed.output.map(_.name))
-    // the edge list is cut once; every round cuts only its degree table
-    assert(cols.count(_ == Seq("u", "v")) == 1, cols)
-    assert(cols.count(_ == Seq("u", "deg")) == 5, cols)
-    assert(all.length == 6, cols)
     def semis(p: SparkPlan) = helper.collect(p) {
       case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j
     }
+    // the cascade peels in rounds 1-3 and is fixed from round 3
+    val (all, cols, out) = g06Fills(Planted.kcoreCascade(spark))
+    // the edge list is cut once; every round cuts only its degree table
+    assert(cols.count(_ == Seq("u", "v")) == 1, cols)
+    assert(cols.count(_ == Seq("u", "deg")) == 4, cols)
+    assert(all.length == 5, cols)
     val rounds = all.map(_.executedPlan).filter(semis(_).nonEmpty)
-    assert(rounds.length == 4, rounds.mkString("\n"))
+    assert(rounds.length == 3, rounds.mkString("\n"))
     // both semi-joins of a round read one broadcast: the second reuses it
     rounds.foreach { p =>
       assert(semis(p).length == 2, p)

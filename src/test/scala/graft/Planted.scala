@@ -63,23 +63,37 @@ object Planted {
     * (degree 3) are the two structural hubs; supplier 11 is a leaf seen
     * by the hub customer only.
     */
-  def purchaseGraph(spark: SparkSession): String = {
+  def purchaseGraph(spark: SparkSession): String =
+    purchases(spark, Seq(
+      (1L, 10L), (1L, 11L), (1L, 12L),
+      (2L, 10L), (3L, 10L), (4L, 12L)))
+
+  /** K33 core (customers 1-3 × suppliers 10-12) plus a chain hanging off
+    * it: pendant customer 4 → supplier 13 (also on customers 1, 5) →
+    * customer 5 (also on suppliers 10, 11). A 3-core peel drops customer
+    * 4 in round 1 (degree 1), which leaves supplier 13 at degree 2 for
+    * round 2, which leaves customer 5 at degree 2 for round 3; the K33
+    * remains. A node of degree ≥ 3 only in the raw graph (13, 5) must not
+    * come back.
+    */
+  def kcoreCascade(spark: SparkSession): String =
+    purchases(spark,
+      (for (c <- 1L to 3L; su <- 10L to 12L) yield (c, su)) ++
+        Seq((4L, 13L), (5L, 13L), (1L, 13L), (5L, 10L), (5L, 11L)))
+
+  /** Writes (custkey, suppkey) purchase pairs as orders
+    * (o_orderkey, o_custkey) and lineitem (l_orderkey, l_suppkey), one
+    * order per pair.
+    */
+  def purchases(spark: SparkSession, pairs: Seq[(Long, Long)]): String = {
     val dir = Files.createTempDirectory("graft-graph").toString
     import spark.implicits._
-    // orders: (o_orderkey, o_custkey); lineitem: (l_orderkey, l_suppkey)
-    val pairs = Seq( // (custkey, suppkey) purchase pairs
-      (1L, 10L), (1L, 11L), (1L, 12L),
-      (2L, 10L), (3L, 10L), (4L, 12L))
-    val orders = pairs.zipWithIndex
-      .map { case ((c, _), i) => (i.toLong, c) }
-      .toDF("o_orderkey", "o_custkey")
-    val lineitem = pairs.zipWithIndex
-      .map { case ((_, su), i) => (i.toLong, su) }
-      .toDF("l_orderkey", "l_suppkey")
-    orders.coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/orders.parquet")
-    lineitem.coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/lineitem.parquet")
+    pairs.zipWithIndex.map { case ((c, _), i) => (i.toLong, c) }
+      .toDF("o_orderkey", "o_custkey").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    pairs.zipWithIndex.map { case ((_, su), i) => (i.toLong, su) }
+      .toDF("l_orderkey", "l_suppkey").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     dir
   }
 }

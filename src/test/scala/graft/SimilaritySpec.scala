@@ -75,7 +75,6 @@ class SimilaritySpec extends SparkSpecBase {
   }
 
   test("a05 int8 quantization: codes replay exactly, max_err within scale/2") {
-    import org.apache.spark.sql.functions._
     val got = run("a05_embedding_quantize").collect()
       .map(r => r.getAs[Long]("vec_id") ->
         (r.getAs[Double]("scale"), r.getAs[Long]("qsum"),

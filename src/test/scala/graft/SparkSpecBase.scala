@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftCoreShim
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,5 +35,28 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     finally saved.foreach { case (k, old) =>
       old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
+  }
+
+  /** `body`'s result with every query the session finished while it
+    * ran: the successful ones in completion order, then the failures.
+    */
+  def queriesDuring[A](body: => A): (A, Seq[QueryExecution], Seq[Exception]) = {
+    val ok = new ConcurrentLinkedQueue[QueryExecution]()
+    val failed = new ConcurrentLinkedQueue[Exception]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        ok.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        failed.add(e)
+    }
+    GraftCoreShim.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val a =
+      try {
+        val a = body
+        GraftCoreShim.drainListenerBus(spark.sparkContext)
+        a
+      } finally spark.listenerManager.unregister(listener)
+    (a, ok.asScala.toSeq, failed.asScala.toSeq)
   }
 }
