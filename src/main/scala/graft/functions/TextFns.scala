@@ -1,21 +1,32 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.functions._
 
 /** Tokenization / shingling / hashing helpers shared by the dedup and
-  * text-analysis operators. Builtins only (split/transform/xxhash64) so
-  * everything is codegen'd and deterministic across runs and engines.
+  * text-analysis operators. Tokens are the split builtin; n-gram strings,
+  * n-gram hashes and top-bigram counts are the native graft.plans
+  * kernels (one pass per row, no per-element closures); everything is
+  * deterministic across runs and engines.
   */
 object TextFns {
+
+  import graft.plans.{NGramHashExpr, NGramStringExpr, TopBigramExpr}
 
   /** Whitespace tokens of lowercased, trimmed text. */
   def tokens(text: Column): Column = split(lower(trim(text)), "\\s+")
 
-  /** n-token shingles ("w1 w2 w3"). Caller guarantees size(toks) >= n. */
+  /** n-token shingles ("w1 w2 w3"), via the native NGramStringExpr;
+    * fewer than n tokens give an empty array.
+    */
   def shingles(toks: Column, n: Int): Column =
-    transform(sequence(lit(0), size(toks) - n),
-      i => concat_ws(" ", slice(toks, i + lit(1), lit(n))))
+    GraftShim.column(NGramStringExpr(GraftShim.expression(toks), n))
+
+  /** Occurrences of the most frequent adjacent token pair (0 under two
+    * tokens), via the native TopBigramExpr.
+    */
+  def topBigram(toks: Column): Column =
+    GraftShim.column(TopBigramExpr(GraftShim.expression(toks)))
 
   /** k independent 64-bit hash functions: xxhash64 with a distinct salt
     * column per index — the MinHash permutation family.
@@ -25,11 +36,9 @@ object TextFns {
   /** Distinct hashed n-gram shingles of `text`, via the native
     * NGramHashExpr (no per-shingle string building).
     */
-  def shingleHashes(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftShim
+  def shingleHashes(text: Column, n: Int): Column =
     array_distinct(GraftShim.column(
-      graft.plans.NGramHashExpr(GraftShim.expression(tokens(text)), n)))
-  }
+      NGramHashExpr(GraftShim.expression(tokens(text)), n)))
 
   /** Common stopword list used by quality scoring / lang-id heuristics. */
   val stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in")

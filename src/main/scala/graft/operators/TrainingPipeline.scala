@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import graft.functions.TextFns
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -48,34 +48,41 @@ object TrainingPipeline {
     shingled(docs.filter(col("doc_id") % 97 =!= 0), "doc_id").join(bench, "h")
   }
 
-  /** Per-doc repetition stats + flag (p04 and p06's quality gate). Docs
-    * with fewer than 2 tokens have no bigrams: the LEFT join + coalesce
-    * keeps them with zero counts (unflagged) instead of dropping them.
+  /** The four repetition counts of token array `t` (longs) and the
+    * Gopher-style flag over them: dup-token fraction > 0.7 OR top-bigram
+    * fraction > 0.2, by integer cross-multiplication (the last column).
+    * All in-row.
     */
-  private def repetitionStats(docs: DataFrame): DataFrame = {
-    val tk = docs.select(col("doc_id"), TextFns.tokens(col("text")).as("t"))
-    val tstat = tk.select(col("doc_id"), explode(col("t")).as("w"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tok"), countDistinct("w").as("n_distinct"))
-    val bstat = tk.filter(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(TextFns.shingles(col("t"), 2)).as("g"))
-      .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id")
-      .agg(max("c").as("top_bigram"), sum("c").as("n_bigram"))
-    tstat.join(bstat, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tok"), col("n_distinct"),
-        coalesce(col("top_bigram"), lit(0L)).as("top_bigram"),
-        coalesce(col("n_bigram"), lit(0L)).as("n_bigram"))
-      .withColumn("flagged",
-        ((col("n_tok") - col("n_distinct")) * 10 > col("n_tok") * 7 ||
-         col("top_bigram") * 10 > col("n_bigram") * 2).cast("int"))
+  private def repetitionCols(t: Column): Seq[Column] = {
+    val nTok = size(t).cast("long")
+    val nDistinct = size(array_distinct(t)).cast("long")
+    val top = TextFns.topBigram(t).cast("long")
+    val nBigram = greatest(size(t) - 1, lit(0)).cast("long")
+    val flagged = ((nTok - nDistinct) * 10 > nTok * 7 ||
+                   top * 10 > nBigram * 2).cast("int")
+    Seq(nTok.as("n_tok"), nDistinct.as("n_distinct"),
+      top.as("top_bigram"), nBigram.as("n_bigram"), flagged.as("flagged"))
   }
+
+  /** Per-doc repetition stats + flag (p04's rows), one projection per
+    * row: no token or bigram shuffle. Precondition: doc_id is unique —
+    * with duplicate doc_id rows each row is judged on its own, where a
+    * grouped explode→groupBy(doc_id) form would pool them. Tokens come
+    * from split on \s+, so they hold no space and no NULL: each bigram
+    * string names one token pair and count(DISTINCT token) is
+    * size(array_distinct(t)). NULL text has no tokens and gets no row;
+    * docs with < 2 tokens carry zero bigram counts and stay unflagged.
+    */
+  private def repetitionStats(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), TextFns.tokens(col("text")).as("t"))
+      .select(col("doc_id") +: repetitionCols(col("t")): _*)
 
   /** p03's (and p06's) deterministic domain-mix predicate: keep iff the
     * doc's md5-derived draw v ∈ [0,256) is under the source's weight
     * threshold (source index mod 4 → 32/64/96/128 of 256).
     */
-  private def mixKeep: org.apache.spark.sql.Column =
+  private def mixKeep: Column =
     conv(substring(md5(col("doc_id").cast("string").cast("binary")), 1, 2),
       16, 10).cast("int") <
       (substring(col("source"), 4, 10).cast("int") % 4 + 1) * 32
@@ -92,21 +99,25 @@ object TrainingPipeline {
   /** Shared p06/p06b pipeline. `cacheSurvivors` is the 100 TB knob the
     * p06 scaladoc promises: the stage-1/2 survivor set feeds BOTH the
     * dedup keep-min aggregation and the final semi-join, so without a
-    * cache its whole subtree (documents scan + quality semi-join +
+    * cache its whole subtree (documents scan + in-row quality filter +
     * contamination anti-join) executes twice. p06b persists it —
     * PlanShapeSpec pins the scan-count drop, Bench measures the delta.
     */
   private def prepPipeline(s: SparkSession, d: String,
                            cacheSurvivors: Boolean): DataFrame = {
     val docs = t(s, d, "documents")
-    // stage 1: repetition gate — keep docs p04 would NOT flag
-    // (same repetitionStats helper, so the two can never diverge)
-    val clean = repetitionStats(docs)
-      .filter(col("flagged") === 0).select("doc_id")
     // stage 2: decontamination vs the benchmark shingle set
     val contaminated = contaminationHits(docs).select("doc_id").distinct()
+    // stage 1: repetition gate, a row filter keeping docs p04 would NOT
+    // flag (same repetitionCols, so the two can never diverge; NULL text
+    // gives a NULL flag and is dropped, as p04 gives it no row); then
+    // stage 2's anti-join. `exists` over the one-element array binds the
+    // tokens once: Spark inlines a projected column into a pushed-down
+    // filter, and a filter has no common-subexpression elimination, so
+    // a plain filter would split the text once per count.
     val surv1Plan = docs.filter(col("doc_id") % 97 =!= 0)
-      .join(clean, Seq("doc_id"), "left_semi")
+      .filter(exists(array(TextFns.tokens(col("text"))),
+        t => repetitionCols(t).last === 0))
       .join(contaminated, Seq("doc_id"), "left_anti")
     val surv1 =
       if (cacheSurvivors) survivorCache.register(surv1Plan) else surv1Plan
@@ -258,10 +269,10 @@ object TrainingPipeline {
     // and top-bigram concentration, kept as exact integer counts (no
     // cross-engine float rounding surface); `flagged` = dup-token
     // fraction > 0.7 OR top-bigram fraction > 0.2 via integer cross-
-    // multiplication. Two hash-agg shuffles keyed by doc_id /
-    // (doc_id, bigram) — per-doc work, embarrassingly parallel. Docs
-    // with <2 tokens carry zero bigram counts and stay unflagged
-    // (LEFT join in repetitionStats) — every doc gets a verdict.
+    // multiplication. One in-row projection per doc (native top-bigram
+    // kernel, no token or bigram shuffle): map-only up to the orderBy.
+    // Docs with <2 tokens carry zero bigram counts and stay unflagged —
+    // every doc with non-NULL text gets a verdict.
     "p04_repetition_score" -> QueryDef(
       build = (s, d) =>
         repetitionStats(t(s, d, "documents")).orderBy("doc_id"),
@@ -325,13 +336,13 @@ object TrainingPipeline {
     // ---------------------------------------------------------------- p06
     // END-TO-END prep flagship: repetition-quality gate (p04) →
     // benchmark decontamination (p01) → exact dedup keep-min (d01) →
-    // domain mix (p03) as ONE declarative job. Each stage's shuffle is
-    // keyed by doc_id / shingle-hash / content-hash — a DAG of
-    // hash-partitioned passes; no stage funnels the corpus through a
-    // single task or the driver. The branches re-scan `documents`
-    // (column-pruned each time; AQE reuses only identical subplans);
-    // p06b below is the 100 TB deployment shape that persists the
-    // survivor set instead. This is the job a corpus user actually
+    // domain mix (p03) as ONE declarative job. The gate is a row filter;
+    // each later stage's shuffle is keyed by shingle-hash / content-hash
+    // / doc_id — a DAG of hash-partitioned passes; no stage funnels the
+    // corpus through a single task or the driver. The branches re-scan
+    // `documents` (column-pruned each time; AQE reuses only identical
+    // subplans); p06b below is the 100 TB deployment shape that persists
+    // the survivor set instead. This is the job a corpus user actually
     // ships.
     "p06_prep_pipeline" -> QueryDef(
       build = (s, d) => prepPipeline(s, d, cacheSurvivors = false),
@@ -415,7 +426,7 @@ object TrainingPipeline {
     // --------------------------------------------------------------- p06b
     // p06 with the stage-1/2 survivor set persisted: the dedup keep-min
     // aggregation and the final semi-join both read ONE materialization
-    // instead of re-running the documents scan + quality semi-join +
+    // instead of re-running the documents scan + quality filter +
     // contamination anti-join subtree. At 100 TB that is two saved
     // full-corpus passes for survivor-set-sized memory/disk.
     // Identical oracle — caching must never change answers.

@@ -54,6 +54,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     register(ext, "graft_simhash64", classOf[SimHashExpr], 1,
       "graft_simhash64(array<string> tokens)")(
       c => SimHashExpr(c(0)))
+    register(ext, "graft_top_bigram", classOf[TopBigramExpr], 1,
+      "graft_top_bigram(array<string> tokens)")(
+      c => TopBigramExpr(c(0)))
     register(ext, "graft_winnow", classOf[WinnowExpr], 2,
       "graft_winnow(array<bigint> hashes, int w)")(
       c => WinnowExpr(c(0), intLit(c(1), "graft_winnow")))

@@ -7,10 +7,14 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Space-joined n-gram strings of a token array in one pass — output is
-  * byte-identical to `transform(sequence(...), i -> concat_ws(' ',
-  * slice(toks, i+1, n)))` but without the per-shingle interpreted
-  * closure, slice allocation, and sequence array.
+/** Space-joined n-gram strings of a token array in one pass: the body of
+  * `TextFns.shingles`, so every string-shingle key runs on this kernel.
+  * Where the array holds at least n tokens the output is byte-identical
+  * to `transform(sequence(0, size(toks) - n), i -> concat_ws(' ',
+  * slice(toks, i+1, n)))` (NativeExprSpec keeps that form as the
+  * reference), without its per-shingle interpreted closure, slice
+  * allocation and sequence array. Under n tokens it returns an empty
+  * array, where that form failed on `slice` at index 0.
   */
 case class NGramStringExpr(child: Expression, n: Int)
     extends UnaryExpression with CodegenFallback {

@@ -101,6 +101,42 @@ class NativeExprSpec extends SparkSpecBase {
     assert(fps.contains(0L)) // global min is always some window's min
   }
 
+  test("TopBigramExpr equals a sliding(2)/groupBy count on random arrays") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(1207)
+    val vocab = Vector("a", "b", "c")
+    val sizes = Seq(0, 1, 2) ++ Seq.fill(60)(rnd.nextInt(201))
+    val arrays: Seq[Option[Seq[String]]] =
+      None +: sizes.map(n => Some(Seq.fill(n)(vocab(rnd.nextInt(3)))))
+    def reference(t: Seq[String]): Int =
+      t.sliding(2).filter(_.size == 2).toSeq.groupBy(identity)
+        .values.map(_.size).maxOption.getOrElse(0)
+    val got = arrays.zipWithIndex.toDF("toks", "id")
+      .select(col("id"), graft.functions.TextFns.topBigram(col("toks")))
+      .orderBy("id").collect()
+      .map(r => if (r.isNullAt(1)) None else Some(r.getInt(1))).toSeq
+    assert(got == arrays.map(_.map(reference)))
+  }
+
+  test("TextFns.shingles equals the transform/concat_ws/slice form") {
+    import spark.implicits._
+    // the interpreted form TextFns.shingles ran before NGramStringExpr;
+    // it fails under n tokens, so every array here holds at least n
+    def sliced(toks: org.apache.spark.sql.Column, n: Int) =
+      transform(sequence(lit(0), size(toks) - n),
+        i => concat_ws(" ", slice(toks, i + lit(1), lit(n))))
+    val rnd = new scala.util.Random(1208)
+    val vocab = Vector("", "a", "b", "é", "日本", "straße", "\u00a0x")
+    Seq(2, 3, 8, 16).foreach { n =>
+      val arrays = Seq.fill(40)(
+        Seq.fill(n + rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size))))
+      val df = arrays.toDF("toks")
+      val rows = df.select(graft.functions.TextFns.shingles(col("toks"), n),
+        sliced(col("toks"), n)).collect()
+      rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), s"n=$n"))
+    }
+  }
+
   test("every native expression is SQL-callable and matches the DataFrame path") {
     // same real docs, both surfaces: a SQL user of the extensions gets
     // bit-identical signatures to the DataFrame/TextFns user
@@ -113,6 +149,7 @@ class NativeExprSpec extends SparkSpecBase {
       GraftShim.column(MinHashSigExpr(expr(ngrams(toks, 3)), 8)).as("mh"),
       ngrams(toks, 3).as("nh"),
       GraftShim.column(graft.plans.NGramStringExpr(expr(toks), 2)).as("ng"),
+      graft.functions.TextFns.topBigram(toks).as("tb"),
       GraftShim.column(SimHashExpr(expr(toks))).as("sim"),
       GraftShim.column(WinnowExpr(expr(ngrams(toks, 3)), 4)).as("wf"))
       .orderBy("doc_id").collect()
@@ -121,6 +158,7 @@ class NativeExprSpec extends SparkSpecBase {
              graft_minhash_sig(graft_ngram_hash(split(lower(trim(text)), '\\s+'), 3), 8) AS mh,
              graft_ngram_hash(split(lower(trim(text)), '\\s+'), 3) AS nh,
              graft_ngrams(split(lower(trim(text)), '\\s+'), 2) AS ng,
+             graft_top_bigram(split(lower(trim(text)), '\\s+')) AS tb,
              graft_simhash64(split(lower(trim(text)), '\\s+')) AS sim,
              graft_winnow(graft_ngram_hash(split(lower(trim(text)), '\\s+'), 3), 4) AS wf
       FROM docs_ne ORDER BY doc_id""").collect()

@@ -108,6 +108,29 @@ class PlanShapeSpec extends SparkSpecBase {
     assert(p.contains("LeftSemi"), p) // documents pruned to candidate ids
   }
 
+  test("p04's repetition gate is in-row: no Generate, no hash exchange") {
+    val p = plan("p04_repetition_score")
+    assert(!p.contains("Generate"), p)
+    assert(!p.contains("hashpartitioning"), p) // only the orderBy's range
+  }
+
+  test("p06b's cached build explodes only contamination's two shingle sets") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val p6b = run("p06b_prep_pipeline_cached").queryExecution.executedPlan
+    val builds = helper.collect(p6b) {
+      case s: InMemoryTableScanExec => s.relation.cachedPlan }
+    assert(builds.nonEmpty, p6b)
+    // benchmark and corpus 8-gram shingles; the repetition gate is a
+    // row filter and explodes nothing
+    val gens = helper.collect(builds.head) { case g: GenerateExec => g }
+    assert(gens.size == 2, builds.head)
+    gens.foreach(g => assert(g.generator.sql.contains("ngram_string"), g))
+    graft.operators.HotCache.releaseAll()
+  }
+
   test("p06b: every live documents read goes through the survivor cache") {
     val p6 = plan("p06_prep_pipeline")
     val p6b = plan("p06b_prep_pipeline_cached")

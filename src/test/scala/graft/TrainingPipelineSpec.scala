@@ -180,6 +180,58 @@ class TrainingPipelineSpec extends SparkSpecBase {
     assert(out(3L) == ((1L, 1L, 0L, 0L, 0))) // present, not silently dropped
   }
 
+  /** The grouped repetition gate p04 ran before its in-row form: explode
+    * tokens → groupBy(doc_id, w) counts; explode bigram strings (the
+    * transform/concat_ws form) → groupBy(doc_id, g) → groupBy(doc_id);
+    * LEFT join + coalesce. The reference p04's rows must equal.
+    */
+  private def groupedRepetitionRows(dir: String) = {
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val tk = docs.select(col("doc_id"),
+      graft.functions.TextFns.tokens(col("text")).as("t"))
+    val tstat = tk.select(col("doc_id"), explode(col("t")).as("w"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_tok"), countDistinct("w").as("n_distinct"))
+    val bigrams = transform(sequence(lit(0), size(col("t")) - 2),
+      i => concat_ws(" ", slice(col("t"), i + lit(1), lit(2))))
+    val bstat = tk.filter(size(col("t")) >= 2)
+      .select(col("doc_id"), explode(bigrams).as("g"))
+      .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
+      .groupBy("doc_id")
+      .agg(max("c").as("top_bigram"), sum("c").as("n_bigram"))
+    tstat.join(bstat, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_tok"), col("n_distinct"),
+        coalesce(col("top_bigram"), lit(0L)).as("top_bigram"),
+        coalesce(col("n_bigram"), lit(0L)).as("n_bigram"))
+      .withColumn("flagged",
+        ((col("n_tok") - col("n_distinct")) * 10 > col("n_tok") * 7 ||
+         col("top_bigram") * 10 > col("n_bigram") * 2).cast("int"))
+      .orderBy("doc_id").collect().toSeq
+  }
+
+  test("p04's in-row gate equals the grouped explode/groupBy reference") {
+    val planted = plant(Seq(
+      1L -> null,                       // no tokens: no row on either side
+      2L -> "",                         // one "" token
+      3L -> "   ",                      // whitespace-only: trims to ""
+      4L -> "\tfoo bar foo",            // tab-led: first token is ""
+      5L -> "The the THE tHe cat",      // mixed-case repeats
+      6L -> "solo",                     // one token
+      7L -> "two words",                // one bigram
+      8L -> "x y x y x y z",            // repeated bigram: flagged
+      9L -> "a\u00a0b a\u00a0b c"))     // NBSP is not \s: stays in-token
+    Seq(sf, planted).foreach { dir =>
+      val got = run("p04_repetition_score", dir).collect().toSeq
+      val want = groupedRepetitionRows(dir)
+      assert(got.nonEmpty && got == want, dir)
+    }
+    val flagged = run("p04_repetition_score", planted).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Int]("flagged")).toMap
+    // a lone bigram is its own top bigram: every two-token doc is flagged
+    assert(!flagged.contains(1L) && flagged(6L) == 0 &&
+      flagged(7L) == 1 && flagged(8L) == 1)
+  }
+
   test("p11 dedup savings match hand-computed token-weighted removal") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("tpipe11").toString
